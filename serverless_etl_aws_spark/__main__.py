@@ -64,7 +64,7 @@ def main(argv: list[str] | None = None) -> int:
         description=(
             "Show the physical plan of a registry key or SQL string. "
             "Some keys (streaming runs, atomic-table maintenance, "
-            "staged scans — see queries.EAGER_KEYS) execute real work "
+            "staged scans — see queries.Query.eager) execute real work "
             "at DataFrame-build time; explaining them RUNS them, so "
             "they are refused without --allow-side-effects."
         ),

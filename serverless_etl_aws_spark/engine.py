@@ -65,14 +65,15 @@ class Engine:
         plan text so callers can assert on it (the same string
         tests/test_plans.py pins).
 
-        Keys in :data:`queries.EAGER_KEYS` execute real work at
-        DataFrame-build time (streaming runs, commit/vacuum cycles,
-        scratch staging, an embedded Derby write) — explaining them means
-        RUNNING them. They are refused unless ``allow_side_effects=True``
-        so "show me the plan" can never silently execute a pipeline.
-        Keys in :data:`queries.COMPUTE_EAGER_KEYS` also compute at build
-        time (iterative loops, eager checkpoints, bounded collects) but
-        mutate nothing — they are allowed, just not instant."""
+        Keys whose :attr:`queries.Query.eager` is ``"state"`` execute
+        real work at DataFrame-build time (streaming runs, commit/vacuum
+        cycles, scratch staging, an embedded Derby write) — explaining
+        them means RUNNING them. They are refused unless
+        ``allow_side_effects=True`` so "show me the plan" can never
+        silently execute a pipeline. Keys with ``eager="compute"`` also
+        compute at build time (iterative loops, eager checkpoints,
+        bounded collects) but mutate nothing — they are allowed, just not
+        instant."""
         from .queries import EAGER_KEYS, build_registry
 
         registry = build_registry()

@@ -1,7 +1,7 @@
 """Frequency-sketch primitives shared by the sketch-routed aggregates.
 
 The Misra-Gries summary here is the map-side half of
-``agg_heavy_hitters`` (queries/extras11.py): each partition maintains at
+``agg_heavy_hitters`` (queries/aggregates.py): each partition maintains at
 most ``k`` counters and merges batch counts in; the union of every
 partition's surviving keys is then verified by ONE exact filtered count.
 The function is kept pure (dict in, dict out, no Spark) so its

@@ -141,22 +141,33 @@ class PartitionedRollup:
         fail loudly HERE rather than OOM the driver — the limit+1 fetch
         (or the caller's sliced collect_set) never hands over more than
         the cap."""
+        return self.refresh_partitions(
+            self._touched_partitions("refresh_for_batch", batch_df, touched)
+        )
+
+    def _touched_partitions(
+        self, caller: str, df: DataFrame, touched: list | None = None
+    ) -> list:
+        """The distinct partition values ``df`` touches (or the caller's
+        precomputed ``touched``), fetched with a limit+1 so a
+        high-cardinality column can never hand more than
+        ``max_touched_partitions`` + 1 values to the driver."""
         if touched is None:
             touched_df = (
-                batch_df.select(self.partition_col)
+                df.select(self.partition_col)
                 .distinct()
                 .limit(self.max_touched_partitions + 1)
             )
             touched = [r[0] for r in touched_df.collect()]
         if len(touched) > self.max_touched_partitions:
             raise ValueError(
-                f"refresh_for_batch: batch touches more than "
+                f"{caller}: touches more than "
                 f"{self.max_touched_partitions} distinct "
                 f"{self.partition_col!r} values — {self.partition_col!r} "
                 f"does not look like a partition column; pick a "
                 f"low-cardinality column or raise max_touched_partitions"
             )
-        return self.refresh_partitions(touched)
+        return touched
 
     def upsert(
         self,
@@ -193,20 +204,9 @@ class PartitionedRollup:
         # without the checkpoint the full upstream aggregation would
         # execute twice.
         delta_gold = delta_gold.localCheckpoint(eager=True)
-        touched_df = (
-            delta_gold.select(self.partition_col)
-            .distinct()
-            .limit(self.max_touched_partitions + 1)
-        )
-        touched = [r[0] for r in touched_df.collect()]
+        touched = self._touched_partitions("upsert", delta_gold)
         if not touched:
             return 0
-        if len(touched) > self.max_touched_partitions:
-            raise ValueError(
-                f"upsert: delta touches more than "
-                f"{self.max_touched_partitions} distinct "
-                f"{self.partition_col!r} values"
-            )
         if self._gold_exists():
             # No read-before-overwrite barrier needed: the merged plan
             # reads the CURRENT snapshot's files while the commit writes

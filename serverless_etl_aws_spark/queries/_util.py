@@ -488,6 +488,13 @@ def scratch_root() -> str:
     return os.path.join(base, f"pid{os.getpid()}")
 
 
+#: Scratch root of this process, shared by every key that stages files.
+SCRATCH = scratch_root()
+
+#: Positive class of the binary-label keys (eval, stump, KS, uplift).
+POS_LABEL = "purchase"
+
+
 def nation_trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One (customer-nation, supplier-nation) row per lineitem — the
     shared fact-join reduction behind the graph keys (graph_pagerank /
@@ -520,7 +527,7 @@ def nation_trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graph_jaccard re-derives the supplier-part bipartite edges on every
 # call — each rebuild is a full lineitem self-join/distinct. Memoizing
 # the MATERIALIZED relation per (applicationId, sf_dir) follows the BPE
-# merge-engine pattern (extras9._BPE_CACHE): one FileScan + one
+# merge-engine pattern (llm._BPE_CACHE): one FileScan + one
 # distinct-shuffle per session for the whole family, and warm bench runs
 # start from the checkpoint instead of re-deriving edges. Keyed by
 # applicationId so a restarted session can never see another JVM's

@@ -1,4 +1,6 @@
-"""Join operators: inner/broadcast/multiway/left/semi/anti/range/as-of.
+"""Join operators (key prefix ``join_``): inner/broadcast/multiway/left/
+semi/anti/range/as-of, plus skew (salted), bucketed, dynamic-partition-
+pruning, interval-overlap and lateral joins.
 
 The reference performs no joins (SURVEY.md §2A, "explicitly absent") — it
 delegates everything to Spark inside Glue (reference:
@@ -18,12 +20,23 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
 from . import Query
-from ._util import SQL_REVENUE_DEC, dsum, revenue_dec, spread, sql_dsum, t
+from ._util import (
+    SCRATCH,
+    SQL_REVENUE_DEC,
+    dsum,
+    fresh_dir,
+    revenue_dec,
+    spread,
+    sql_dsum,
+    t,
+)
 
 
 def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -338,8 +351,6 @@ ASOF LEFT JOIN (
 """
 
 
-
-
 def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER join — the reconciliation shape (two systems' views of
     the same key space, keep every key from BOTH sides): customers with
@@ -391,6 +402,272 @@ FULL OUTER JOIN (
 """
 
 
+def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Salt-spread shuffle join (operators/skew.py): semantically identical
+    to the plain join the oracle runs — salting only changes the physical
+    key distribution."""
+    from ..operators.skew import salted_join
+
+    li = t(spark, sf_dir, "lineitem")
+    orders = t(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
+    )
+    joined = salted_join(
+        li, orders, key="l_orderkey", salt_from="l_linenumber", num_salts=8
+    )
+    return joined.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("line_count"),
+        F.round(
+            F.sum(F.col("l_extendedprice").cast("decimal(18,4)")), 2
+        ).cast("double").alias("sum_price"),
+    )
+
+
+JOIN_SALTED_SQL = """
+SELECT o_orderpriority,
+       COUNT(*) AS line_count,
+       CAST(ROUND(SUM(CAST(CASE WHEN l_extendedprice - (l_extendedprice) = 0 THEN l_extendedprice END AS DECIMAL(18,4))), 2) AS DOUBLE)
+           AS sum_price
+FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+GROUP BY o_orderpriority
+"""
+
+
+def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bucketed co-located join: both sides pre-bucketed on the key, the
+    join plan has no Exchange (asserted in tests/test_plans.py) — the
+    recurring-join scale play."""
+    from ..operators.skew import bucketed_join, write_bucketed
+
+    base = fresh_dir(os.path.join(SCRATCH, "bucketed"))
+    write_bucketed(
+        t(spark, sf_dir, "orders"), "orders_b", "o_custkey", 8,
+        os.path.join(base, "orders_b"),
+    )
+    write_bucketed(
+        t(spark, sf_dir, "customer"), "customer_b", "c_custkey", 8,
+        os.path.join(base, "customer_b"),
+    )
+    joined = bucketed_join(spark, "orders_b", "customer_b", "o_custkey", "c_custkey")
+    return joined.groupBy("c_mktsegment").agg(
+        F.count(F.lit(1)).alias("order_count"),
+        F.round(
+            F.sum(F.col("o_totalprice").cast("decimal(18,4)")), 2
+        ).cast("double").alias("sum_price"),
+    )
+
+
+JOIN_BUCKETED_SQL = """
+SELECT c_mktsegment,
+       COUNT(*) AS order_count,
+       CAST(ROUND(SUM(CAST(CASE WHEN o_totalprice - (o_totalprice) = 0 THEN o_totalprice END AS DECIMAL(18,4))), 2) AS DOUBLE)
+           AS sum_price
+FROM orders JOIN customer ON o_custkey = c_custkey
+GROUP BY c_mktsegment
+"""
+
+
+def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dynamic partition pruning: a partitioned fact table joined to a
+    dimension whose selective filter is only knowable at RUNTIME (the
+    category is computed on dim rows, so no static predicate exists on
+    the fact's partition column) — Catalyst injects a
+    ``dynamicpruningexpression`` into the fact scan's PartitionFilters,
+    reusing the broadcast dim as the filter. THE mechanism that makes a
+    dim-filtered fact query read 2 of N partitions instead of 100 TB;
+    tests/test_plans.py asserts the pruning subquery is really in the
+    scan. The stage-out writes events partitioned by event_type to give
+    the scan real partition directories to prune."""
+    ev = t(spark, sf_dir, "events")
+    base = fresh_dir(os.path.join(SCRATCH, "join_dpp"))
+    ev.write.partitionBy("event_type").parquet(base, mode="overwrite")
+    # schema-pinned read-back: an empty corpus stages no partition dirs
+    # and must read as an empty fact table, not a schema-inference error
+    fact = spark.read.schema(ev.schema).parquet(base)
+
+    dim = (
+        ev.select("event_type").distinct()
+        .withColumn(
+            "category",
+            F.when(
+                F.col("event_type").isin("purchase", "click"), "engagement"
+            ).otherwise("passive"),
+        )
+    )
+    return (
+        fact.join(
+            F.broadcast(dim.filter(F.col("category") == "engagement")),
+            "event_type",
+        )
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("event_count"),
+            dsum("value").alias("sum_value"),
+        )
+    )
+
+
+JOIN_DPP_SQL = """
+SELECT event_type,
+       COUNT(*) AS event_count,
+       CAST(ROUND(SUM(CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_value
+FROM events
+WHERE event_type IN ('purchase', 'click')
+GROUP BY event_type
+"""
+
+
+# Interval-overlap bin width (days). Chosen at the scale of the interval
+# lengths (7/14 days) so each interval covers <= ~4 bins — the explode
+# fan-out stays O(1) per row while bins keep join buckets small.
+BIN_DAYS = 7
+
+EPOCH = "1970-01-01"
+
+
+def _day(col: F.Column) -> F.Column:
+    return F.datediff(col, F.lit(EPOCH).cast("date"))
+
+
+def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interval-overlap join: order activity windows [o_orderdate,
+    +14d] × shipment windows [l_shipdate, +7d], emitting each
+    overlapping pair once with its overlap length.
+
+    Scale shape — the standard bin-bucketed formulation (used by
+    genomic range joins and temporal databases): each interval explodes
+    into the fixed-width bins it covers (O(1) per row at this width), the
+    join runs as an EQUI-join on the bin, and a pair is emitted only in
+    the bin that contains the overlap start — exact dedup without a
+    DISTINCT shuffle. A naive theta-join (start <= end AND ...) is a
+    broadcast-nested-loop over the whole fact table and is the plan this
+    formulation exists to avoid; the oracle states exactly that
+    theta-join declaratively."""
+    orders = (
+        t(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") % 13 == 0)
+        .select(
+            "o_orderkey",
+            _day(F.to_date("o_orderdate")).alias("a_start"),
+            (_day(F.to_date("o_orderdate")) + 14).alias("a_end"),
+        )
+    )
+    ship = (
+        t(spark, sf_dir, "lineitem")
+        .filter(F.col("l_partkey") % 11 == 0)
+        .select(
+            "l_orderkey",
+            "l_linenumber",
+            _day(F.to_date("l_shipdate")).alias("b_start"),
+            (_day(F.to_date("l_shipdate")) + 7).alias("b_end"),
+        )
+    )
+    a = orders.withColumn(
+        "bin",
+        F.explode(
+            F.sequence(
+                F.floor(F.col("a_start") / BIN_DAYS),
+                F.floor(F.col("a_end") / BIN_DAYS),
+            )
+        ),
+    )
+    b = ship.withColumn(
+        "bin",
+        F.explode(
+            F.sequence(
+                F.floor(F.col("b_start") / BIN_DAYS),
+                F.floor(F.col("b_end") / BIN_DAYS),
+            )
+        ),
+    )
+    ov_start = F.greatest("a_start", "b_start")
+    ov_end = F.least("a_end", "b_end")
+    return (
+        a.join(b, "bin")
+        .filter(
+            (F.col("a_start") <= F.col("b_end"))
+            & (F.col("b_start") <= F.col("a_end"))
+            # emit only in the overlap-start bin => exactly-once without
+            # a distinct
+            & (F.col("bin") == F.floor(ov_start / BIN_DAYS))
+        )
+        .select(
+            "o_orderkey",
+            "l_orderkey",
+            "l_linenumber",
+            (ov_end - ov_start + 1).cast("int").alias("overlap_days"),
+        )
+    )
+
+
+JOIN_INTERVAL_OVERLAP_SQL = """
+WITH a AS (
+  SELECT o_orderkey,
+         date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
+             AS a_start,
+         date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) + 14
+             AS a_end
+  FROM orders WHERE o_orderkey % 13 = 0
+), b AS (
+  SELECT l_orderkey, l_linenumber,
+         date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE))
+             AS b_start,
+         date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) + 7
+             AS b_end
+  FROM lineitem WHERE l_partkey % 11 = 0
+)
+SELECT a.o_orderkey, b.l_orderkey, b.l_linenumber,
+       CAST(least(a_end, b_end) - greatest(a_start, b_start) + 1 AS INT)
+           AS overlap_days
+FROM a JOIN b ON a.a_start <= b.b_end AND b.b_start <= a.a_end
+"""
+
+
+# --------------------------------------------------------- join_lateral
+
+LATERAL_TOP_K = 2
+
+
+def join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Correlated LATERAL subquery join: for every nation, the top-2
+    customers by account balance (name tie-break) — the per-row
+    parameterized-subquery operator (LATERAL / CROSS APPLY in warehouse
+    dialects). Expressed as actual SQL LATERAL, NOT hand-rewritten to a
+    window: the point of the key is that Catalyst DECORRELATES the
+    per-nation ORDER BY ... LIMIT into a WindowGroupLimit (partial+final
+    per-group top-k, no global sort) feeding one broadcast hash join —
+    a nested-loop re-execution per outer row appears nowhere
+    (tests/test_plans.py pins the plan). That decorrelation is exactly
+    what makes the operator 100 TB-viable: cost is one shuffle of the
+    inner side by the correlation key, independent of outer-row count."""
+    t(spark, sf_dir, "nation").createOrReplaceTempView("nation")
+    t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
+    return spark.sql(
+        f"""
+        SELECT n.n_name, c.c_name, c.c_acctbal
+        FROM nation n,
+        LATERAL (
+            SELECT c_name, c_acctbal FROM customer c
+            WHERE c.c_nationkey = n.n_nationkey
+            ORDER BY c_acctbal DESC, c_name
+            LIMIT {LATERAL_TOP_K}
+        ) c
+        """
+    )
+
+
+JOIN_LATERAL_SQL = f"""
+SELECT n.n_name, c.c_name, c.c_acctbal
+FROM nation n,
+LATERAL (
+    SELECT c_name, c_acctbal FROM customer c
+    WHERE c.c_nationkey = n.n_nationkey
+    ORDER BY c_acctbal DESC, c_name
+    LIMIT {LATERAL_TOP_K}
+) c
+"""
+
+
 QUERIES: dict[str, Query] = {
     "join_inner": Query(join_inner, JOIN_INNER_SQL, "equi inner join"),
     "join_broadcast": Query(join_broadcast, JOIN_BROADCAST_SQL, "broadcast dim join"),
@@ -406,4 +683,20 @@ QUERIES: dict[str, Query] = {
     "join_asof_tolerance": Query(
         join_asof_tolerance, JOIN_ASOF_TOLERANCE_SQL,
         "as-of join with 30-min max-staleness tolerance"),
+    "join_salted": Query(join_salted, JOIN_SALTED_SQL,
+                         "salt-spread skew join"),
+    "join_bucketed": Query(join_bucketed, JOIN_BUCKETED_SQL,
+                           "bucketed shuffle-free join", eager="state"),
+    "join_dpp": Query(
+        join_dpp, JOIN_DPP_SQL,
+        "runtime partition pruning via broadcast dim reuse",
+        eager="state",
+    ),
+    "join_interval_overlap": Query(
+        join_interval_overlap, JOIN_INTERVAL_OVERLAP_SQL,
+        "bin-bucketed interval-overlap join, exactly-once per pair"),
+    "join_lateral": Query(
+        join_lateral, JOIN_LATERAL_SQL,
+        "correlated LATERAL top-k subquery (decorrelated, no nested loop)",
+    ),
 }

@@ -1,8 +1,18 @@
-"""LLM-data-pipeline contract keys: text analysis, dedup family,
-similarity search, multimodal plumbing (SURVEY.md §2B `llm_*` + the
-training-data extensions from BASELINE.json north_star)."""
+"""LLM training-data and multimodal operators (key prefixes ``llm_``,
+``mm_``): text analysis, the dedup family (exact, n-gram, MinHash,
+SimHash, embedding, paragraph, prefix, cross-snapshot) and its apply
+step, similarity search (brute force, IVF, PQ, k-NN join), tokenizer
+training and encoding, curation (quality, language, PII, decontamination,
+splits) and multimodal decode/resize/feature plumbing (SURVEY.md §2B
+``llm_*`` + the training-data extensions from BASELINE.json north_star).
+
+Iterative keys (connected components, BPE merges, centroid training)
+run Spark jobs while their DataFrame is built (``eager="compute"``).
+"""
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -11,22 +21,28 @@ from pyspark.sql.window import Window
 from ..operators import multimodal
 from ..operators.dedup import (
     minhash_banded_pairs,
-    minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
 )
-from ..operators.simsearch import SQL_COSINE, brute_force_topk, cosine_expr, ivf_topk
+from ..operators.simsearch import (
+    SQL_COSINE,
+    brute_force_topk,
+    cosine_expr,
+    ivf_topk,
+    quant6,
+)
 from ..operators.text import (
     LANG_ORDER,
     SQL_FINGERPRINT,
-    fingerprint,
     ascii_lower,
+    fingerprint,
     lang_score,
     lang_tokens,
     sql_lang_score,
 )
 from . import Query
 from ._util import fquant, spread, sql_vec_dim_ok, t, vec_dim_ok, vec_finite
+
 
 # ---------------------------------------------------------------- text ops
 
@@ -988,8 +1004,6 @@ WHERE text IS NOT NULL
 """
 
 
-
-
 def mm_audio_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio-shaped windowed features over binary payloads: u8 sample
     windows -> integer energy statistics (count, sum, sum-of-squares,
@@ -1237,6 +1251,1618 @@ FROM documents
 """
 
 
+# ------------------------------------------------------------- k-NN join
+
+KNN_K = 5
+KNN_N_PROBES = 5
+
+
+def llm_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch k-NN join: top-``KNN_K`` cosine neighbors for EVERY probe in a
+    probe set (vec_id < 5), not just one — the shape dataset-distillation
+    and retrieval-augmentation pipelines actually run (N queries × corpus).
+
+    Scale design: the probe set is broadcast (tiny side), scoring is one
+    map-side pass over the corpus (corpus never shuffles whole), and top-k
+    is TWO-STAGE — a per-(probe, input-partition) partial top-k via
+    ``array_sort + slice`` over grouped structs (state ≤ partition rows,
+    output ≤ k per group), then a merge of the ≤ k·P partials per probe.
+    The full corpus×probes cross product never crosses an exchange; only
+    k·P candidate structs per probe do. A single window rank over
+    (probe_id) would shuffle all corpus×probes scored rows instead.
+
+    Float discipline: cosines are quant6-floored from bit-identical JVM
+    expressions, vec_id tie-break — same contract the hash-green
+    ``llm_sim_search`` key uses.
+    """
+    # poisoned-vector + ragged-dim exclusion (float-specials contract
+    # _util.vec_finite; round-12 ragged-dims contract _util.vec_dim_ok)
+    raw = t(spark, sf_dir, "embeddings")
+    emb = raw.filter(vec_dim_ok(raw) & vec_finite()).select(
+        "vec_id",
+        F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
+    )
+    probes = (
+        emb.filter(F.col("vec_id") < KNN_N_PROBES)
+        .select(F.col("vec_id").alias("pid"), F.col("v").alias("pv"))
+    )
+    scored = (
+        emb.filter(F.col("vec_id") >= KNN_N_PROBES)
+        .join(F.broadcast(probes))
+        .select(
+            "pid",
+            "vec_id",
+            quant6(cosine_expr("v", "pv")).alias("cosine"),
+        )
+        # zero-norm vectors score NULL; drop before the partial top-k
+        # (a NULL-first struct sort would otherwise rank them best)
+        .filter(F.col("cosine").isNotNull())
+    )
+    from ..operators.simsearch import two_stage_topk
+
+    return two_stage_topk(scored, "pid", KNN_K)
+
+
+LLM_KNN_JOIN_SQL = f"""
+WITH e AS (
+    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
+    WHERE (embedding IS NULL OR len(list_filter(embedding, x -> NOT isfinite(CAST(x AS DOUBLE)))) = 0)
+      AND {sql_vec_dim_ok()}
+), cand AS (
+    SELECT p.vec_id AS pid, c.vec_id,
+           floor(({SQL_COSINE.replace('va', 'c.emb').replace('vb', 'p.emb')})
+                 * 1000000.0) / 1000000.0 AS cosine
+    FROM e c CROSS JOIN e p
+    WHERE p.vec_id < {KNN_N_PROBES} AND c.vec_id >= {KNN_N_PROBES}
+), ranked AS (
+    SELECT pid, vec_id, cosine,
+           row_number() OVER (PARTITION BY pid
+                              ORDER BY cosine DESC, vec_id) AS rn
+    FROM cand WHERE cosine IS NOT NULL
+)
+SELECT pid, vec_id, cosine FROM ranked WHERE rn <= {KNN_K}
+"""
+
+
+# ------------------------------------------- snapshot-incremental dedup
+
+
+def llm_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-snapshot dedup — the INCREMENTAL shape of corpus dedup: new
+    documents (here ``doc_id % 4 == 0``) are checked against the previous
+    snapshot (the other 75%) by exact content fingerprint, and only the
+    duplicated new docs are reported with their snapshot-match count. At
+    100 TB this is a fingerprint equi-join where only the (hash, id)
+    projection shuffles — never document text — and the snapshot side is
+    a pre-computed fingerprint table maintained by ingest, not recomputed
+    (recomputed here because the fixture has no state dir).
+    """
+    docs = t(spark, sf_dir, "documents")
+    fp = docs.select("doc_id", fingerprint("text").alias("fp"))
+    new = fp.filter(F.col("doc_id") % 4 == 0)
+    snapshot = fp.filter(F.col("doc_id") % 4 != 0).select(
+        F.col("fp"), F.col("doc_id").alias("snap_id")
+    )
+    return (
+        new.join(snapshot, "fp")
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("snapshot_matches"))
+    )
+
+
+LLM_CROSS_DEDUP_SQL = f"""
+WITH fp AS (
+    SELECT doc_id, {SQL_FINGERPRINT} AS fp FROM documents
+)
+SELECT n.doc_id, COUNT(*) AS snapshot_matches
+FROM (SELECT * FROM fp WHERE doc_id % 4 = 0) n
+JOIN (SELECT * FROM fp WHERE doc_id % 4 <> 0) s ON n.fp = s.fp
+GROUP BY n.doc_id
+"""
+
+
+# ---------------------------------------------- statistical LM quality
+
+
+def llm_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Statistical language-model quality score — the classic
+    perplexity-style quality filter of training-data pipelines, kept
+    transcendental-free so it hash-matches across engines: score a doc by
+    the MEAN CORPUS PROBABILITY of its bigrams (p = corpus_count/total —
+    pure integer division into IEEE doubles; `ln()` differs in the last
+    ulp between libm implementations, so no logs). Repetitive/templated
+    docs score high, rare-garbage docs score low — same ordering signal
+    as negative perplexity.
+
+    Scale: bigram counting is one map-side-combinable groupBy; the
+    doc-bigram ⋈ corpus-count equi-join shuffles on the gram hash (the
+    standard LM-training shuffle; skewed hot grams are exactly what AQE
+    skew-join splits). The mean uses the engine's decimal-sum discipline
+    (sum order differs between engines; decimal accumulation is exact).
+    """
+    docs = t(spark, sf_dir, "documents")
+    bigrams = docs.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "transform(array(split(text, ' ')), toks -> "
+                "CASE WHEN size(toks) >= 2 THEN "
+                "transform(sequence(0, size(toks) - 2), "
+                "i -> concat_ws(' ', toks[i], toks[i + 1])) "
+                "ELSE cast(array() AS array<string>) END)[0]"
+            )
+        ).alias("gram"),
+        # Materialized once: the relation feeds the corpus count AND the
+        # score join's probe side — without this the split+explode over
+        # the whole corpus executes twice (measured 1.7× end-to-end at
+        # sf0.1, same shared-scan pattern as the ngram shingle table).
+    ).localCheckpoint(eager=False)
+    counts = bigrams.groupBy("gram").agg(
+        F.count(F.lit(1)).alias("gram_n")
+    )
+    # total bigram count derived from the (much smaller) gram counts —
+    # Σ gram_n ≡ |bigrams| exactly, saving a third full pass
+    total = counts.agg(F.sum("gram_n").alias("total_n"))
+    scored = (
+        bigrams.join(counts, "gram")
+        .crossJoin(F.broadcast(total))
+        .select(
+            "doc_id",
+            (F.col("gram_n").cast("double") / F.col("total_n")).alias("p"),
+        )
+    )
+    return scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_bigrams"),
+        (
+            F.floor(
+                F.sum(F.col("p").cast("decimal(28,18)")).cast("double")
+                / F.count(F.lit(1))
+                * 1000000000.0
+            )
+            / 1000000000.0
+        ).alias("avg_p"),
+    )
+
+
+LLM_BIGRAM_LM_SQL = """
+WITH bigrams AS (
+    SELECT doc_id, unnest(grams) AS gram
+    FROM (
+        SELECT doc_id,
+               [array_to_string(toks[i:i+1], ' ')
+                for i in range(1, len(toks))] AS grams
+        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
+        WHERE len(toks) >= 2
+    )
+), counts AS (
+    SELECT gram, COUNT(*) AS gram_n FROM bigrams GROUP BY gram
+), total AS (
+    SELECT COUNT(*) AS total_n FROM bigrams
+)
+SELECT b.doc_id,
+       CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+       floor(CAST(SUM(CAST(CAST(c.gram_n AS DOUBLE) / t.total_n
+                           AS DECIMAL(28,18))) AS DOUBLE)
+             / COUNT(*) * 1000000000.0) / 1000000000.0 AS avg_p
+FROM bigrams b JOIN counts c ON b.gram = c.gram CROSS JOIN total t
+GROUP BY b.doc_id
+"""
+
+
+def llm_data_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic train/val/test assignment (~90/5/5) from the id
+    hash. Row-level output so the oracle checks every assignment, not
+    just the counts. Scale: one map pass; the split column then drives
+    partitioned writes downstream (`partitionBy("split")`).
+
+    A hash-threshold op, not ``df.sample``: the eval split must be stable
+    across runs, retries and re-ingests so it can be decontaminated against
+    exactly (llm_decontaminate)."""
+    docs = t(spark, sf_dir, "documents")
+    fp = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
+    return docs.select(
+        "doc_id",
+        F.when(fp < "e6", "train")
+        .when(fp < "f3", "val")
+        .otherwise("test")
+        .alias("split"),
+    )
+
+
+LLM_DATA_SPLIT_SQL = """
+SELECT doc_id,
+       CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6'
+                THEN 'train'
+            WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'f3'
+                THEN 'val'
+            ELSE 'test' END AS split
+FROM documents
+"""
+
+
+def llm_sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization approximate top-10 (rows-only: PQ scores are
+    lossy by construction — recall vs. brute force is measured in
+    tests/test_operators.py). 16 subspaces × 64 centroids compress a
+    64-dim float corpus 16:1; asymmetric-distance scoring + exact
+    re-ranking of the top 80 candidates measures recall@10 = 1.0 at
+    sf0.1 (near-uniform random embeddings are PQ's worst case — the
+    coarser 8×16 codebook only reached 0.2 there, so the registry pins
+    the measured configuration). Same persisted-index contract as IVF:
+    codebooks are trained once per corpus fingerprint and cached."""
+    from ..operators.simsearch import corpus_cache_key, pq_topk
+
+
+    # ragged-dim + poisoned-vector exclusion (round-12 contract,
+    # _util.vec_dim_ok; round-11 contract, _util.vec_finite — ADVICE r12:
+    # a NaN/Inf vector of modal dim would otherwise reach the np
+    # codebook trainer and poison the ADC codebooks, unlike every
+    # sibling similarity key which already filters both)
+    raw = t(spark, sf_dir, "embeddings")
+    emb = raw.filter(vec_dim_ok(raw) & vec_finite())
+    return pq_topk(
+        emb, probe_vec_id=_min_vec_id(emb), k=10,
+        m=16, ksub=64, refine=8,
+        corpus_key=corpus_cache_key(
+            os.path.join(sf_dir, "embeddings.parquet"), label="pq"
+        ),
+    )
+
+
+BPE_TOP = 20
+
+
+def llm_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First BPE merge round over the corpus: frequency of every ADJACENT
+    token pair — the counting primitive a tokenizer-training pipeline
+    (BPE/WordPiece) iterates at corpus scale. One lateral position
+    explode (zero-shuffle, rows × avg_len fan-out like llm_doc_chunk)
+    into one partial-aggregated count shuffle of O(vocab²-observed)
+    groups; top-k via TakeOrderedAndProject with a total order (count
+    desc, pair asc) so the cut is deterministic across engines."""
+    # spread: the split + position explode fan-out is per-row compute
+    # that would otherwise run on the single row-group's one scan task
+    # (guide §2.5).
+    docs = spread(t(spark, sf_dir, "documents"), sf_dir, "documents")
+    toks = F.split(F.col("text"), " ")
+    pairs = (
+        # The size >= 2 guard is load-bearing: Spark's sequence(1, 0)
+        # DESCENDS ([1, 0]) for a single-token doc, and element_at(_, 0)
+        # errors — whereas DuckDB's range(1, 1) is just empty. Filtering
+        # first gives both engines the drop-the-row semantics.
+        docs.filter(F.size(toks) >= 2)
+        .select(
+            toks.alias("toks"),
+            F.explode(F.sequence(F.lit(1), F.size(toks) - 1)).alias("i"),
+        )
+        .select(
+            F.concat(
+                F.element_at("toks", F.col("i")),
+                F.lit(" "),
+                F.element_at("toks", F.col("i") + 1),
+            ).alias("pair")
+        )
+    )
+    return (
+        pairs.groupBy("pair")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy(F.col("n").desc(), F.col("pair"))
+        .limit(BPE_TOP)
+    )
+
+
+LLM_BPE_PAIRS_SQL = f"""
+SELECT tokens[t.i] || ' ' || tokens[t.i + 1] AS pair,
+       COUNT(*) AS n
+FROM (SELECT string_split(text, ' ') AS tokens FROM documents) d
+CROSS JOIN LATERAL unnest(range(1, len(tokens))) AS t(i)
+GROUP BY 1
+ORDER BY n DESC, pair
+LIMIT {BPE_TOP}
+"""
+
+
+def llm_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The end-to-end curation pass as ONE declarative plan — quality
+    gate → exact dedup (canonical = lowest doc_id per fingerprint) →
+    language rebalancing → train/val/test split — i.e. the composition a
+    real corpus run executes, here as a single Catalyst plan so the
+    optimizer sees (and fuses) the whole thing: the quality filter and
+    fingerprint computation ride the same scan, the dedup is one
+    window over the fingerprint, and the split/rebalance are map-side
+    expressions on the survivors. Output: per (lang, split) survivor
+    counts plus summed chars — the corpus card a curation run publishes.
+
+    At 100 TB the single-plan shape matters: a step-per-job pipeline
+    (filter job → dedup job → split job) re-reads the corpus three
+    times; this reads it once."""
+    from pyspark.sql.window import Window
+
+    docs = t(spark, sf_dir, "documents")
+    toks = F.split(F.col("text"), " ")
+    quality_ok = (
+        F.col("text").isNotNull()
+        & (F.size(toks) >= 16)
+        & (F.col("n_chars") >= 64)
+    )
+    fp = F.md5("text")
+    w = Window.partitionBy("fp").orderBy("doc_id")
+    hash2 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
+    survivors = (
+        docs.filter(quality_ok)
+        .withColumn("fp", fp)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)  # canonical doc per exact-dup group
+        # per-language rebalance: downsample dominant 'en' to ~25%
+        .filter(
+            F.when(F.col("lang") == "en", hash2 < F.lit("40")).otherwise(
+                F.lit(True)
+            )
+        )
+        .withColumn(
+            "split",
+            F.when(hash2 < F.lit("0d"), "val")
+            .when(hash2 < F.lit("1a"), "test")
+            .otherwise("train"),
+        )
+    )
+    return survivors.groupBy("lang", "split").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_chars").alias("total_chars"),
+    )
+
+
+LLM_CURATION_PIPELINE_SQL = """
+WITH survivors AS (
+  SELECT doc_id, lang, n_chars,
+         substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS h2
+  FROM (
+    SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
+    FROM (
+      SELECT doc_id, lang, n_chars, md5(text) AS fp
+      FROM documents
+      WHERE text IS NOT NULL
+        AND len(string_split(text, ' ')) >= 16
+        AND n_chars >= 64
+    )
+  )
+  WHERE rn = 1
+), rebalanced AS (
+  SELECT *,
+         CASE WHEN h2 < '0d' THEN 'val'
+              WHEN h2 < '1a' THEN 'test'
+              ELSE 'train' END AS split
+  FROM survivors
+  WHERE CASE WHEN lang = 'en' THEN h2 < '40' ELSE TRUE END
+)
+SELECT lang, split, COUNT(*) AS n_docs,
+       CAST(SUM(n_chars) AS BIGINT) AS total_chars
+FROM rebalanced
+GROUP BY 1, 2
+"""
+
+
+MIX_CAP = 5.0
+
+
+def llm_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus mixture reweighting: compute the per-language sampling
+    weight that moves the token distribution toward uniform across
+    languages (the data-mixing step before training — upweight
+    under-represented slices, downweight dominant ones), with the
+    upsampling factor capped at MIX_CAP so rare slices are not repeated
+    into memorization.
+
+    weight_lang = min(cap, target_share / actual_share) where
+    actual_share = lang_tokens / total_tokens and target_share = 1/K.
+    One aggregation pass over the corpus; every ratio is a division of
+    exact integer token counts (whitespace tokens), so the doubles are
+    bit-identical across engines and the floor-quantized weights hash-
+    match. Output also carries the effective post-weight share, the
+    number the mixing loop iterates on."""
+    docs = t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    toks = F.size(F.split(F.col("text"), " ")).cast("long")
+    per_lang = docs.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(toks).alias("lang_tokens"),
+    )
+    totals = per_lang.agg(
+        F.sum("lang_tokens").alias("total_tokens"),
+        F.count(F.lit(1)).cast("double").alias("k_langs"),
+    )
+    j = per_lang.crossJoin(F.broadcast(totals))
+    actual = F.col("lang_tokens").cast("double") / F.col("total_tokens").cast("double")
+    target = F.lit(1.0) / F.col("k_langs")
+    weight = F.least(F.lit(MIX_CAP), target / actual)
+    eff = actual * weight
+    return j.select(
+        "lang",
+        "n_docs",
+        "lang_tokens",
+        fquant(weight, 6).alias("mix_weight"),
+        fquant(eff, 6).alias("effective_share"),
+    )
+
+
+LLM_MIX_WEIGHTS_SQL = f"""
+WITH per_lang AS (
+  SELECT lang, COUNT(*) AS n_docs,
+         SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS lang_tokens
+  FROM documents
+  WHERE text IS NOT NULL
+  GROUP BY lang
+), totals AS (
+  SELECT CAST(SUM(lang_tokens) AS BIGINT) AS total_tokens,
+         CAST(COUNT(*) AS DOUBLE) AS k_langs
+  FROM per_lang
+)
+SELECT p.lang, p.n_docs, CAST(p.lang_tokens AS BIGINT) AS lang_tokens,
+       floor(least({MIX_CAP},
+                   (1.0 / t.k_langs)
+                   / (CAST(p.lang_tokens AS DOUBLE)
+                      / CAST(t.total_tokens AS DOUBLE))) * 1000000.0)
+         / 1000000.0 AS mix_weight,
+       floor((CAST(p.lang_tokens AS DOUBLE) / CAST(t.total_tokens AS DOUBLE))
+             * least({MIX_CAP},
+                     (1.0 / t.k_langs)
+                     / (CAST(p.lang_tokens AS DOUBLE)
+                        / CAST(t.total_tokens AS DOUBLE))) * 1000000.0)
+         / 1000000.0 AS effective_share
+FROM per_lang p CROSS JOIN totals t
+"""
+
+
+# ------------------------------------------------- llm_winnow_fingerprint
+
+WINNOW_K = 4  # tokens per k-gram
+WINNOW_W = 4  # k-grams per winnowing window
+
+
+def llm_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD 2003):
+    hash every K-token shingle, slide a W-wide window over the hash
+    sequence, keep each window's minimum — the guaranteed-coverage local
+    fingerprint set used for plagiarism/near-dup detection. Output is the
+    distinct selected-hash set per document.
+
+    Determinism: selection keeps the min VALUE per window (not a
+    tie-position rule), so the selected SET is identical regardless of
+    which position a tied minimum occupies. Hashes are md5-prefix strings
+    — lexicographic min agrees across engines on ASCII hex. Scale: one
+    narrow map pass (explode + window over intra-doc positions, partition
+    = doc_id, no cross-doc shuffle beyond the doc_id partitioning)."""
+    docs = t(spark, sf_dir, "documents")
+    toks = docs.filter(F.col("text").isNotNull()).select(
+        "doc_id", F.split("text", " ").alias("tk")
+    ).filter(F.size("tk") >= WINNOW_K)
+    grams = toks.select(
+        "doc_id",
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(1), F.size("tk") - (WINNOW_K - 1)),
+                lambda i: F.substring(
+                    F.md5(
+                        F.concat_ws(
+                            " ",
+                            F.element_at("tk", i),
+                            F.element_at("tk", i + 1),
+                            F.element_at("tk", i + 2),
+                            F.element_at("tk", i + 3),
+                        )
+                    ),
+                    1,
+                    12,
+                ),
+            )
+        ).alias("pos", "h"),
+    )
+    w_cnt = Window.partitionBy("doc_id")
+    w_win = (
+        Window.partitionBy("doc_id")
+        .orderBy("pos")
+        .rowsBetween(Window.currentRow, WINNOW_W - 1)
+    )
+    return (
+        grams.withColumn("n", F.count(F.lit(1)).over(w_cnt))
+        .withColumn("wmin", F.min("h").over(w_win))
+        # only full windows: with 0-based pos over n grams, a window
+        # starting at pos spans [pos, pos + W - 1] and fits iff
+        # pos <= n - W
+        .filter(F.col("pos") <= F.col("n") - WINNOW_W)
+        .select("doc_id", F.col("wmin").alias("fp"))
+        .distinct()
+    )
+
+
+LLM_WINNOW_SQL = f"""
+WITH d AS (
+  SELECT doc_id, string_split(text, ' ') AS tk
+  FROM documents WHERE text IS NOT NULL AND len(string_split(text, ' ')) >= {WINNOW_K}
+), g AS (
+  SELECT doc_id, i.i AS pos,
+         substr(md5(tk[i.i] || ' ' || tk[i.i+1] || ' ' || tk[i.i+2]
+                    || ' ' || tk[i.i+3]), 1, 12) AS h,
+         len(tk) - {WINNOW_K - 1} AS n
+  FROM d CROSS JOIN LATERAL (
+    SELECT unnest(generate_series(1, len(tk) - {WINNOW_K - 1})) AS i
+  ) i
+)
+SELECT DISTINCT doc_id,
+       min(h) OVER (PARTITION BY doc_id ORDER BY pos
+                    ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING) AS fp
+FROM g
+QUALIFY pos <= n - {WINNOW_W - 1}
+"""
+
+
+HN_K = 5
+HN_N_PROBES = 5
+
+
+def llm_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hard-negative mining for contrastive training: for each probe
+    vector, the top-K most-similar corpus vectors with a DIFFERENT label
+    — the "looks similar, is not" pairs a retrieval/embedding trainer
+    feeds as negatives.
+
+    Scale shape shared with llm_knn_join: probes broadcast,
+    one map-side JVM cosine pass over the corpus with the label-mismatch
+    filter applied BEFORE any aggregation, then the two-stage partial
+    top-k (operators/simsearch.py::two_stage_topk) so only k·P candidate
+    structs per probe cross an exchange. NULL labels (drift sweeps) drop
+    out of the mismatch predicate identically in both engines."""
+    from ..operators.simsearch import cosine_expr, quant6, two_stage_topk
+
+    # poisoned-vector + ragged-dim exclusion (float-specials contract
+    # _util.vec_finite; round-12 ragged-dims contract _util.vec_dim_ok)
+    raw = t(spark, sf_dir, "embeddings")
+    emb = raw.filter(vec_dim_ok(raw) & vec_finite()).select(
+        "vec_id",
+        "label",
+        F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
+    )
+    probes = emb.filter(F.col("vec_id") < HN_N_PROBES).select(
+        F.col("vec_id").alias("pid"),
+        F.col("label").alias("plabel"),
+        F.col("v").alias("pv"),
+    )
+    scored = (
+        emb.filter(F.col("vec_id") >= HN_N_PROBES)
+        .join(F.broadcast(probes))
+        .filter(F.col("label") != F.col("plabel"))
+        .select("pid", "vec_id", quant6(cosine_expr("v", "pv")).alias("cosine"))
+        # zero-norm vectors score NULL; drop before the partial top-k
+        .filter(F.col("cosine").isNotNull())
+    )
+    return two_stage_topk(scored, "pid", HN_K)
+
+
+def _hn_sql() -> str:
+    from ..operators.simsearch import SQL_COSINE
+
+    cos = SQL_COSINE.replace("va", "c.emb").replace("vb", "p.emb")
+    return f"""
+WITH e AS (
+    SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
+    WHERE (embedding IS NULL OR len(list_filter(embedding, x -> NOT isfinite(CAST(x AS DOUBLE)))) = 0)
+      AND {sql_vec_dim_ok()}
+), cand AS (
+    SELECT p.vec_id AS pid, c.vec_id,
+           floor(({cos}) * 1000000.0) / 1000000.0 AS cosine
+    FROM e c CROSS JOIN e p
+    WHERE p.vec_id < {HN_N_PROBES} AND c.vec_id >= {HN_N_PROBES}
+      AND c.label <> p.label
+), ranked AS (
+    SELECT pid, vec_id, cosine,
+           row_number() OVER (PARTITION BY pid
+                              ORDER BY cosine DESC, vec_id) AS rn
+    FROM cand WHERE cosine IS NOT NULL
+)
+SELECT pid, vec_id, cosine FROM ranked WHERE rn <= {HN_K}
+"""
+
+
+# ---------------------------------------------------- llm_span_corruption
+
+SPAN_PERIOD = 10  # every 10 tokens...
+SPAN_LEN = 3  # ...the last 3 become one masked span
+
+
+def llm_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T5-style span corruption: deterministic spans (the last SPAN_LEN
+    tokens of every SPAN_PERIOD-token block) are replaced by one
+    <extra_id_N> sentinel in the corrupted text; the targets string
+    carries sentinel-prefixed original spans — the (input, target) pair a
+    denoising pretrain objective consumes.
+
+    Deterministic by construction (position arithmetic, no RNG — the
+    fixture can't move under it). One explode + one grouped re-assembly
+    per side, order pinned by token position."""
+    docs = t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    toks = docs.select(
+        "doc_id",
+        F.posexplode(F.split("text", " ")).alias("pos", "tok"),
+    )
+    in_span = (F.col("pos") % SPAN_PERIOD) >= (SPAN_PERIOD - SPAN_LEN)
+    span_start = (F.col("pos") % SPAN_PERIOD) == (SPAN_PERIOD - SPAN_LEN)
+    span_id = F.floor(F.col("pos") / SPAN_PERIOD).cast("int")
+    sentinel = F.concat(F.lit("<extra_id_"), span_id, F.lit(">"))
+    corrupted_tok = F.when(span_start, sentinel).when(
+        in_span, F.lit(None)
+    ).otherwise(F.col("tok"))
+    target_tok = F.when(
+        span_start, F.concat(sentinel, F.lit(" "), F.col("tok"))
+    ).when(in_span, F.col("tok"))
+    parts = toks.select(
+        "doc_id",
+        "pos",
+        corrupted_tok.alias("ctok"),
+        target_tok.alias("ttok"),
+    )
+    assemble = lambda col: F.array_join(  # noqa: E731
+        F.expr(
+            f"transform(array_sort(collect_list(struct(pos, {col}))),"
+            f" s -> s.{col})"
+        ),
+        " ",
+    )
+    return parts.groupBy("doc_id").agg(
+        assemble("ctok").alias("corrupted"),
+        assemble("ttok").alias("targets"),
+    )
+
+
+LLM_SPAN_CORRUPTION_SQL = f"""
+WITH toks AS (
+  SELECT doc_id, i.i - 1 AS pos, tk[i.i] AS tok
+  FROM (SELECT doc_id, string_split(text, ' ') AS tk
+        FROM documents WHERE text IS NOT NULL) d
+  CROSS JOIN LATERAL (SELECT unnest(generate_series(1, len(tk))) AS i) i
+), parts AS (
+  SELECT doc_id, pos,
+         CASE WHEN pos % {SPAN_PERIOD} = {SPAN_PERIOD - SPAN_LEN}
+              THEN '<extra_id_' || CAST(pos // {SPAN_PERIOD} AS INT) || '>'
+              WHEN pos % {SPAN_PERIOD} >= {SPAN_PERIOD - SPAN_LEN}
+              THEN NULL
+              ELSE tok END AS ctok,
+         CASE WHEN pos % {SPAN_PERIOD} = {SPAN_PERIOD - SPAN_LEN}
+              THEN '<extra_id_' || CAST(pos // {SPAN_PERIOD} AS INT) || '> '
+                   || tok
+              WHEN pos % {SPAN_PERIOD} >= {SPAN_PERIOD - SPAN_LEN}
+              THEN tok END AS ttok
+  FROM toks
+)
+SELECT doc_id,
+       COALESCE(string_agg(ctok, ' ' ORDER BY pos), '') AS corrupted,
+       COALESCE(string_agg(ttok, ' ' ORDER BY pos), '') AS targets
+FROM parts
+GROUP BY doc_id
+"""
+
+
+# -------------------------------------------------------- llm_bpe_train
+
+BPE_ITERS = 3
+
+
+def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed BPE merge training, 3 exact iterations: count adjacent
+    token pairs, pick the most frequent (deterministic (count DESC, a, b)
+    tie-break), apply leftmost-greedy non-overlapping merges, repeat —
+    the tokenizer-training loop, run on the cluster instead of a single
+    machine (the same exact-iteration recipe as ml_kmeans: the oracle
+    unrolls identical iterations as SQL CTEs).
+
+    Leftmost-greedy marking is window-parallel, not sequential: overlaps
+    are only possible when a == b (runs of the same symbol), and within a
+    run of consecutive pair-hits the merges land at even offsets — so
+    islands of consecutive hits + an even-offset test reproduce the
+    sequential scan exactly. Per iteration: one doc-partition window
+    pass, one (a,b) count shuffle, one bounded O(1) driver collect (the
+    argmax pair — same justification as the IVF training sample), and a
+    localCheckpoint to truncate lineage. Output: per-iteration learned
+    pair, its (overlap-counted) frequency, applied merge count, and
+    corpus tokens remaining."""
+    rows, _seq = _bpe_run(spark, sf_dir)
+    return spark.createDataFrame(
+        rows,
+        "it int, pair_a string, pair_b string, pair_count long,"
+        " merges long, tokens_after long",
+    )
+
+
+# Session-level result cache for the shared merge engine (VERDICT r5 #6):
+# llm_bpe_train and llm_bpe_encode deliberately share _bpe_run so train
+# and apply can never drift — but without a cache each key re-runs the
+# full 3-iteration train. Caching the RESULT per (session, sf_dir, iters)
+# keeps the single-implementation guarantee (one engine, memoized) while
+# letting encode reuse train's materialized sequence: the returned
+# DataFrames sit on localCheckpoints, so after their first action the
+# lineage is truncated and replays are cheap. Keyed by applicationId so a
+# restarted session can never see another JVM's checkpointed RDDs.
+_BPE_CACHE: dict[tuple, tuple] = {}
+
+
+def _bpe_run(spark: SparkSession, sf_dir: str):
+    """Shared BPE merge engine: BPE_ITERS exact iterations, returning
+    (per-iteration stats rows, final encoded sequence DF). llm_bpe_train
+    reports the former; llm_bpe_encode aggregates the latter — train and
+    apply share one implementation, so the learned merges and the encoded
+    corpus can never drift apart. Memoized per session+corpus (see
+    _BPE_CACHE above)."""
+    cache_key = (spark.sparkContext.applicationId, sf_dir, BPE_ITERS)
+    hit = _BPE_CACHE.get(cache_key)
+    if hit is not None:
+        return hit
+    docs = t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    seq = docs.select(
+        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
+    ).localCheckpoint(eager=False)
+
+    w_doc = Window.partitionBy("doc_id").orderBy("pos")
+    w_run = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    rows = []
+    # each applied merge removes exactly one token, so the per-iteration
+    # corpus size is prev - merges — no count() action on the rebuilt
+    # sequence needed (the oracle still COUNTs its rebuilt CTE, so a
+    # rebuild defect would still hash-mismatch)
+    n_tokens = seq.count()
+    for it in range(1, BPE_ITERS + 1):
+        paired = seq.withColumn("nxt", F.lead("tok").over(w_doc))
+        top = (
+            paired.filter(F.col("nxt").isNotNull())
+            .groupBy("tok", "nxt")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .orderBy(F.desc("c"), "tok", "nxt")
+            .limit(1)
+            .collect()
+        )
+        if not top:
+            break
+        a, b, c = top[0]["tok"], top[0]["nxt"], top[0]["c"]
+        ip = (F.col("tok") == F.lit(a)) & (F.col("nxt") == F.lit(b))
+        marked = (
+            paired.withColumn("ip", ip)
+            .withColumn(
+                "grp",
+                F.col("pos")
+                - F.sum(F.col("ip").cast("int")).over(w_run),
+            )
+        )
+        w_isl = Window.partitionBy("doc_id", "grp").orderBy("pos").rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+        marked = marked.withColumn(
+            "ms",
+            F.col("ip")
+            & (((F.sum(F.col("ip").cast("int")).over(w_isl)) - 1) % 2 == 0),
+        ).localCheckpoint(eager=False)
+        n_merges = marked.agg(
+            F.sum(F.col("ms").cast("long")).alias("m")
+        ).collect()[0]["m"] or 0
+        rebuilt = (
+            marked.withColumn(
+                "pm", F.lag("ms").over(w_doc)
+            )
+            .filter(~F.coalesce(F.col("pm"), F.lit(False)))
+            .select(
+                "doc_id",
+                (F.row_number().over(w_doc) - 1).alias("pos"),
+                F.when(
+                    F.col("ms"), F.concat("tok", F.lit(" "), "nxt")
+                ).otherwise(F.col("tok")).alias("tok"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        n_tokens -= int(n_merges)
+        rows.append((it, a, b, int(c), int(n_merges), int(n_tokens)))
+        seq = rebuilt
+
+    _BPE_CACHE[cache_key] = (rows, seq)
+    return rows, seq
+
+
+def _bpe_iter_sql(i: int) -> str:
+    """One unrolled BPE iteration over sequence CTE s{i-1} → s{i}:
+    pair counts → deterministic argmax → island/even-offset greedy
+    marking → rebuild. Mirrors llm_bpe_train's loop body exactly."""
+    p = i - 1
+    return f"""
+w{i} AS MATERIALIZED (
+  SELECT doc_id, pos, tok,
+         lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt
+  FROM s{p}
+), t{i} AS MATERIALIZED (
+  SELECT tok AS a, nxt AS b, COUNT(*) AS c
+  FROM w{i} WHERE nxt IS NOT NULL
+  GROUP BY tok, nxt
+  ORDER BY c DESC, a, b
+  LIMIT 1
+), m{i} AS (
+  SELECT w.doc_id, w.pos, w.tok, w.nxt, t.a, t.b, t.c,
+         (w.tok = t.a AND w.nxt = t.b) AS ip
+  FROM w{i} w CROSS JOIN t{i} t
+), g{i} AS (
+  SELECT *,
+         pos - SUM(CASE WHEN ip THEN 1 ELSE 0 END)
+                   OVER (PARTITION BY doc_id ORDER BY pos
+                         ROWS UNBOUNDED PRECEDING) AS grp
+  FROM m{i}
+), k{i} AS MATERIALIZED (
+  SELECT *,
+         ip AND ((SUM(CASE WHEN ip THEN 1 ELSE 0 END)
+                      OVER (PARTITION BY doc_id, grp ORDER BY pos
+                            ROWS UNBOUNDED PRECEDING) - 1) % 2 = 0) AS ms
+  FROM g{i}
+), l{i} AS (
+  SELECT *, lag(ms) OVER (PARTITION BY doc_id ORDER BY pos) AS pm
+  FROM k{i}
+), s{i} AS MATERIALIZED (
+  SELECT doc_id,
+         ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
+         CASE WHEN ms THEN tok || ' ' || nxt ELSE tok END AS tok
+  FROM l{i} WHERE NOT COALESCE(pm, FALSE)
+  -- degenerate-corpus fallback: an empty pair vocabulary (t{i} has no
+  -- row) empties the rebuild chain via the CROSS JOIN, but the Spark
+  -- loop BREAKs and keeps the previous sequence — carry s{p} forward
+  UNION ALL
+  SELECT doc_id, pos, tok FROM s{p}
+  WHERE NOT EXISTS (SELECT 1 FROM t{i})
+), r{i} AS (
+  SELECT {i} AS it,
+         (SELECT a FROM t{i}) AS pair_a,
+         (SELECT b FROM t{i}) AS pair_b,
+         (SELECT CAST(c AS BIGINT) FROM t{i}) AS pair_count,
+         (SELECT CAST(COUNT(CASE WHEN ms THEN 1 END) AS BIGINT)
+          FROM k{i}) AS merges,
+         (SELECT CAST(COUNT(*) AS BIGINT) FROM s{i}) AS tokens_after
+)"""
+
+
+LLM_BPE_TRAIN_SQL = (
+    """
+WITH s0 AS (
+  SELECT doc_id, i.i - 1 AS pos, tk[i.i] AS tok
+  FROM (SELECT doc_id, string_split(text, ' ') AS tk
+        FROM documents WHERE text IS NOT NULL) d
+  CROSS JOIN LATERAL (SELECT unnest(generate_series(1, len(tk))) AS i) i
+)"""
+    + "".join("," + _bpe_iter_sql(i) for i in range(1, BPE_ITERS + 1))
+    # pair_a IS NULL marks an iteration whose pair vocabulary was empty
+    # (t{i} returned no row) — the Spark loop BREAKs there, so the
+    # oracle must drop those rows too or a degenerate corpus (all docs
+    # single-token) emits 3 oracle rows vs Spark's fewer
+    + """
+SELECT * FROM r1 WHERE pair_a IS NOT NULL
+UNION ALL SELECT * FROM r2 WHERE pair_a IS NOT NULL
+UNION ALL SELECT * FROM r3 WHERE pair_a IS NOT NULL
+"""
+)
+
+
+def llm_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer APPLICATION — the other half of the BPE story: encode
+    the corpus with the learned merges and report, per document, the
+    final token count, how many tokens are merge products, and an
+    order-sensitive md5 of the encoded sequence (so a mis-ordered or
+    mis-merged rebuild cannot hash-match even with correct counts).
+
+    Shares the merge engine with llm_bpe_train (_bpe_run) — in a real
+    pipeline train and apply MUST agree on leftmost-greedy semantics,
+    and sharing the implementation makes divergence impossible. The
+    oracle replays the identical unrolled iterations (the train
+    oracle's CTE chain) and aggregates its final sequence.
+
+    Scale: the encode output is one groupBy over the final sequence —
+    O(tokens) rows into a per-doc aggregate, all JVM."""
+    _rows, seq = _bpe_run(spark, sf_dir)
+    return seq.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_tokens"),
+        F.sum(F.col("tok").contains(" ").cast("long")).alias("n_merged"),
+        F.md5(
+            F.concat_ws(
+                "|",
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "tok"))),
+                    lambda s: s["tok"],
+                ),
+            )
+        ).alias("seq_md5"),
+    )
+
+
+LLM_BPE_ENCODE_SQL = (
+    """
+WITH s0 AS (
+  SELECT doc_id, i.i - 1 AS pos, tk[i.i] AS tok
+  FROM (SELECT doc_id, string_split(text, ' ') AS tk
+        FROM documents WHERE text IS NOT NULL) d
+  CROSS JOIN LATERAL (SELECT unnest(generate_series(1, len(tk))) AS i) i
+)"""
+    + "".join("," + _bpe_iter_sql(i) for i in range(1, BPE_ITERS + 1))
+    + f"""
+SELECT doc_id,
+       CAST(COUNT(*) AS BIGINT) AS n_tokens,
+       CAST(COUNT(CASE WHEN contains(tok, ' ') THEN 1 END) AS BIGINT)
+         AS n_merged,
+       md5(string_agg(tok, '|' ORDER BY pos)) AS seq_md5
+FROM s{BPE_ITERS}
+GROUP BY doc_id
+"""
+)
+
+
+# ------------------------------------------------- llm_paragraph_dedup
+
+PARA_W = 8          # tokens per segment ("paragraph" granularity)
+PARA_MIN_DOCS = 2   # segment is boilerplate if it appears in >= this many docs
+
+
+def llm_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-document boilerplate removal — the C4/CCNet preprocessing
+    step: segment every document (non-overlapping PARA_W-token windows),
+    find segments whose hash occurs in ≥ PARA_MIN_DOCS distinct docs,
+    strip ALL their occurrences, and reassemble each document in original
+    segment order. Complements the doc-level dedup family: it removes
+    repeated headers/footers/navigation INSIDE otherwise-unique docs.
+
+    Scale shape: one explode to O(tokens/W) segment rows, one partial-agg
+    groupBy on the 128-bit segment hash (map-side combinable), an
+    anti-join of segments against the boilerplate hash list (AQE picks
+    broadcast while the list is small; at 100 TB the list grows with true
+    boilerplate volume and falls back to a shuffle join on the hash —
+    both sides already partition by it), and one per-doc reassembly
+    shuffle. Text bytes cross the shuffle once (segment rows); the
+    boilerplate decision itself moves only hashes.
+    """
+    docs = t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    toks = F.split(F.col("text"), " ")
+    base = docs.select(
+        "doc_id",
+        toks.alias("toks"),
+        F.ceil(F.size(toks) / F.lit(float(PARA_W))).cast("bigint")
+        .alias("n_segs"),
+    )
+    # Materialized ONCE: the segment relation feeds the boilerplate
+    # groupBy (build side), the anti-join probe side, AND the per-doc
+    # totals — without the checkpoint the corpus split+explode executes
+    # three times (the shared-scan discipline measured on the ngram
+    # shingle table and llm_bigram_lm).
+    segs = base.select(
+        "doc_id",
+        F.explode(
+            F.sequence(F.lit(0), F.col("n_segs").cast("int") - 1)
+        ).alias("seg_no"),
+        "toks",
+    ).select(
+        "doc_id",
+        "seg_no",
+        F.concat_ws(
+            " ", F.slice(F.col("toks"), F.col("seg_no") * PARA_W + 1, PARA_W)
+        ).alias("seg"),
+    ).withColumn("h", F.md5("seg")).localCheckpoint(eager=False)
+    # per-doc totals derived from segs (every non-null-text doc has >= 1
+    # segment), so the documents table is scanned exactly once
+    totals = segs.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_segs")
+    )
+    boiler = (
+        segs.groupBy("h")
+        .agg(F.countDistinct("doc_id").alias("nd"))
+        .filter(F.col("nd") >= PARA_MIN_DOCS)
+        .select("h")
+    )
+    kept = segs.join(boiler, "h", "left_anti")
+    reassembled = kept.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_kept"),
+        F.concat_ws(
+            " ",
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("seg_no", "seg"))),
+                lambda s: s["seg"],
+            ),
+        ).alias("clean_text"),
+    )
+    return (
+        totals.join(reassembled, "doc_id", "left")
+        .select(
+            "doc_id",
+            "n_segs",
+            F.coalesce(F.col("n_kept"), F.lit(0)).alias("n_kept"),
+            (F.col("n_segs") - F.coalesce(F.col("n_kept"), F.lit(0)))
+            .alias("n_dropped"),
+            F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
+        )
+    )
+
+
+LLM_PARAGRAPH_DEDUP_SQL = f"""
+WITH base AS MATERIALIZED (
+  SELECT doc_id, string_split(text, ' ') AS toks,
+         CAST(ceil(len(string_split(text, ' ')) / {PARA_W}.0) AS BIGINT)
+           AS n_segs
+  FROM documents WHERE text IS NOT NULL
+), segs AS MATERIALIZED (
+  SELECT doc_id, i AS seg_no,
+         array_to_string(
+           list_slice(toks, i * {PARA_W} + 1, i * {PARA_W} + {PARA_W}), ' '
+         ) AS seg
+  FROM base, UNNEST(range(n_segs)) u(i)
+), rep AS (
+  SELECT md5(seg) AS h FROM segs
+  GROUP BY md5(seg)
+  HAVING COUNT(DISTINCT doc_id) >= {PARA_MIN_DOCS}
+), kept AS (
+  SELECT * FROM segs WHERE md5(seg) NOT IN (SELECT h FROM rep)
+), agg AS (
+  SELECT doc_id, COUNT(*) AS n_kept,
+         string_agg(seg, ' ' ORDER BY seg_no) AS clean_text
+  FROM kept GROUP BY doc_id
+)
+SELECT b.doc_id, b.n_segs,
+       COALESCE(a.n_kept, 0) AS n_kept,
+       b.n_segs - COALESCE(a.n_kept, 0) AS n_dropped,
+       COALESCE(a.clean_text, '') AS clean_text
+FROM base b LEFT JOIN agg a USING (doc_id)
+"""
+
+
+# ------------------------------------------------------ llm_dedup_apply
+
+
+def llm_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Apply near-dup clustering to the corpus: keep ONE canonical
+    document per connected dup component — the longest (max ``n_chars``,
+    doc_id tie-break), the usual keep-the-most-complete-copy policy —
+    and report what the dedup removed. Builds on the exact cluster
+    assignment ``llm_dedup_cluster`` produces (same pair threshold,
+    same component closure), so detect and apply cannot disagree.
+
+    Scale: the survivor pick is one row_number window over the cluster
+    assignment (shuffle on cluster_id, O(docs) rows) on top of the
+    cluster plan's blocked pair join — no new corpus scan; the join back
+    to ``documents`` for n_chars is doc_id-keyed and column-pruned to
+    two columns.
+
+    Closes the dedup story end-to-end: every detection backend in the family
+    emits pairs or clusters, but a training-data pipeline ultimately needs
+    the SURVIVING corpus — one canonical document per duplicate group,
+    everything else dropped."""
+
+    comp = llm_dedup_cluster(spark, sf_dir)  # doc_id, cluster_id, cluster_size
+    sizes = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    w = Window.partitionBy("cluster_id").orderBy(
+        F.desc("n_chars"), F.asc("doc_id")
+    )
+    return (
+        comp.join(sizes, "doc_id")
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") == 1)
+        .select(
+            "doc_id",
+            "cluster_id",
+            "cluster_size",
+            (F.col("cluster_size") - 1).cast("long").alias("n_removed"),
+        )
+    )
+
+
+LLM_DEDUP_APPLY_SQL = f"""
+WITH RECURSIVE {_NGRAM_PAIRS_CTES}, pairs AS (
+    SELECT doc_a, doc_b FROM scored_pairs WHERE jaccard >= 0.8
+), edges AS (
+    SELECT doc_a AS src, doc_b AS dst FROM pairs
+    UNION ALL
+    SELECT doc_b AS src, doc_a AS dst FROM pairs
+), reach(src, dst) AS (
+    SELECT doc_id, doc_id FROM documents
+    UNION
+    SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+), comp AS (
+    SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src
+), sized AS (
+    SELECT doc_id, cluster_id,
+           COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
+    FROM comp
+), ranked AS (
+    SELECT s.doc_id, s.cluster_id, s.cluster_size,
+           ROW_NUMBER() OVER (PARTITION BY s.cluster_id
+                              ORDER BY d.n_chars DESC, s.doc_id) AS rk
+    FROM sized s JOIN documents d ON d.doc_id = s.doc_id
+)
+SELECT doc_id, cluster_id, cluster_size,
+       CAST(cluster_size - 1 AS BIGINT) AS n_removed
+FROM ranked WHERE rk = 1
+"""
+
+
+# ---------------------------------------------------- llm_ngram_novelty
+
+
+def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Document novelty score: the fraction of a document's distinct
+    word trigrams that occur in NO other document (corpus df = 1).
+    Low novelty = templated/boilerplate content — the cheap corpus-level
+    signal pipelines threshold on before running pair-level dedup at
+    all (a doc that is 90 % shared shingles is a dedup candidate; one
+    that is 95 % unique is not worth pairing). Ratio floor-quantized to
+    4 decimals (integer division into IEEE doubles — deterministic
+    cross-engine, same discipline as the Jaccard scores).
+
+    Scale: the df table is one map-side-combinable groupBy over the
+    shingle explode; the score join shuffles on the gram hash — the
+    identical shape (and skew profile) as the TF-IDF key, linear in
+    corpus shingles. Short docs (< 3 tokens) have no shingles and are
+    absent from the output in both engines."""
+    from ..operators.text import trigrams
+
+    docs = t(spark, sf_dir, "documents")
+    grams = docs.select(
+        "doc_id", F.explode(trigrams("text")).alias("gram")
+    ).localCheckpoint(eager=False)  # feeds df counts AND the score join
+    df_counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
+    return (
+        grams.join(df_counts, "gram")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_grams"),
+            F.sum((F.col("df") == 1).cast("long")).alias("n_unique"),
+            (
+                F.floor(
+                    F.sum((F.col("df") == 1).cast("long"))
+                    * F.lit(10000.0)
+                    / F.count(F.lit(1))
+                )
+                / 10000.0
+            ).alias("novelty"),
+        )
+    )
+
+
+LLM_NGRAM_NOVELTY_SQL = """
+WITH d AS (
+    SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+), g AS (
+    SELECT doc_id,
+           list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                          for i in range(1, len(toks) - 1)]) AS grams
+    FROM d WHERE len(toks) >= 3
+), ex AS (
+    SELECT doc_id, unnest(grams) AS gram FROM g
+), dfc AS (
+    SELECT gram, COUNT(*) AS df FROM ex GROUP BY gram
+)
+SELECT e.doc_id,
+       CAST(COUNT(*) AS BIGINT) AS n_grams,
+       CAST(COUNT(CASE WHEN dfc.df = 1 THEN 1 END) AS BIGINT) AS n_unique,
+       floor(COUNT(CASE WHEN dfc.df = 1 THEN 1 END) * 10000.0
+             / COUNT(*)) / 10000.0 AS novelty
+FROM ex e JOIN dfc USING (gram)
+GROUP BY e.doc_id
+"""
+
+
+# ------------------------------------------------------ llm_prefix_dedup
+
+#: Blocking key width (chars) and hot-block cap. Docs shorter than the
+#: key are not prefix-dedup candidates by contract (tiny docs are the
+#: quality gate's job); blocks shared by more docs than the cap are
+#: boilerplate openings and dropped before the pair join — the same
+#: frequency-stop discipline as the ngram family's stop-shingle cap.
+PREFIX_KEY_CHARS = 32
+PREFIX_MAX_BLOCK_DF = 50
+
+
+def llm_prefix_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Prefix-truncation duplicates — the crawl-pipeline dup class the
+    shingle-Jaccard family underweights: a re-crawl or extraction bug
+    that TRUNCATES a page yields doc A = strict prefix of doc B, whose
+    Jaccard can sit far below any near-dup threshold when B is much
+    longer. Detection: block on the first ``PREFIX_KEY_CHARS``
+    characters (equal-prefix pairs necessarily share the block), drop
+    hot blocks (common openings) by the frequency cap, then verify
+    ``substr(b, 1, len(a)) = a`` with ``len(a) < len(b)`` inside each
+    block. Exact duplicates are excluded (that is ``llm_fingerprint``'s
+    contract — this key reports strict truncations only).
+
+    Scale: one block groupBy (map-side combinable) for the cap, one
+    equi-join on the 32-char block key with fan-out bounded by cap² per
+    block, and the verify is an O(len) substring compare on candidate
+    pairs only — never an all-pairs scan."""
+    docs = (
+        t(spark, sf_dir, "documents")
+        .filter(
+            F.col("text").isNotNull()
+            & (F.length("text") >= PREFIX_KEY_CHARS)
+        )
+        .select(
+            "doc_id", "text",
+            F.length("text").alias("n"),
+            F.substring("text", 1, PREFIX_KEY_CHARS).alias("block"),
+        )
+    )
+    cold = (
+        docs.groupBy("block")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") <= PREFIX_MAX_BLOCK_DF)
+        .select("block")
+    )
+    kb = docs.join(F.broadcast(cold), "block")
+    a = kb.select(
+        F.col("block"), F.col("doc_id").alias("doc_a"),
+        F.col("text").alias("ta"), F.col("n").alias("prefix_len"),
+    )
+    b = kb.select(
+        F.col("block"), F.col("doc_id").alias("doc_b"),
+        F.col("text").alias("tb"), F.col("n").alias("full_len"),
+    )
+    return (
+        a.join(b, "block")
+        .filter(
+            (F.col("prefix_len") < F.col("full_len"))
+            # substring with a column-valued length needs the expr form
+            & (F.expr("substring(tb, 1, prefix_len)") == F.col("ta"))
+        )
+        .select(
+            "doc_a", "doc_b",
+            F.col("prefix_len").cast("long").alias("prefix_len"),
+            F.col("full_len").cast("long").alias("full_len"),
+        )
+    )
+
+
+LLM_PREFIX_DEDUP_SQL = f"""
+WITH d AS (
+    SELECT doc_id, text, length(text) AS n
+    FROM documents
+    WHERE text IS NOT NULL AND length(text) >= {PREFIX_KEY_CHARS}
+), blk AS (
+    SELECT doc_id, text, n,
+           substr(text, 1, {PREFIX_KEY_CHARS}) AS block
+    FROM d
+), cold AS (
+    SELECT block FROM blk GROUP BY block
+    HAVING COUNT(*) <= {PREFIX_MAX_BLOCK_DF}
+), kb AS (
+    SELECT blk.* FROM blk JOIN cold USING (block)
+)
+SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       CAST(a.n AS BIGINT) AS prefix_len,
+       CAST(b.n AS BIGINT) AS full_len
+FROM kb a JOIN kb b ON a.block = b.block AND a.n < b.n
+WHERE substr(b.text, 1, CAST(a.n AS INT)) = a.text
+"""
+
+
+# ---------------------------------------------------------- mm_scene_cut
+
+
+def mm_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Video-shaped scene-change detection over binary payloads:
+    consecutive 64-byte frames compared by summed per-byte absolute
+    delta, cut flagged above a fixed threshold (operators/multimodal.py
+    ::scene_cut — Arrow-batched mapInPandas, integer sufficient
+    statistics so the oracle recomputes the deltas exactly from the
+    payload bytes via hex-nibble decode, the mm_audio_window
+    discipline). A real build swaps the u8 delta for a decoded-frame
+    perceptual metric through the same batch flow."""
+    from ..operators import multimodal
+
+    docs = t(spark, sf_dir, "documents")
+    return multimodal.scene_cut(multimodal.synthesize_payloads(docs))
+
+
+MM_SCENE_CUT_SQL = """
+WITH h AS (
+    SELECT doc_id, hex(encode(text)) AS hx,
+           CAST(octet_length(encode(text)) // 64 AS INT) AS n_frames
+    FROM documents WHERE text IS NOT NULL
+), d AS (
+    SELECT doc_id, CAST(u.j // 64 AS INT) AS frame_no,
+           abs(
+             (strpos('0123456789ABCDEF',
+                     substr(hx, CAST(u.j * 2 + 1 AS INT), 1)) - 1) * 16
+             + strpos('0123456789ABCDEF',
+                      substr(hx, CAST(u.j * 2 + 2 AS INT), 1)) - 1
+             - ((strpos('0123456789ABCDEF',
+                        substr(hx, CAST((u.j + 64) * 2 + 1 AS INT), 1)) - 1)
+                * 16
+                + strpos('0123456789ABCDEF',
+                         substr(hx, CAST((u.j + 64) * 2 + 2 AS INT), 1)) - 1)
+           ) AS delta
+    FROM h, UNNEST(range((n_frames - 1) * 64)) u(j)
+    WHERE n_frames >= 2
+)
+SELECT doc_id, frame_no,
+       CAST(SUM(delta) AS BIGINT) AS diff_sum,
+       SUM(delta) > 640 AS is_cut
+FROM d
+GROUP BY doc_id, frame_no
+"""
+
+
+# ------------------------------------------------------- llm_collocations
+
+#: word2vec phrase-score discount: pairs seen fewer than ~delta times
+#: score negative and drop out (kills rare-pair noise).
+COLLOC_DELTA = 5
+#: Support floor on the pair count itself.
+COLLOC_MIN_PAIR = 5
+#: Keep positively-associated pairs only (score > 1 ~ "co-occur more
+#: than independence predicts, even after the discount").
+COLLOC_MIN_SCORE = 1.0
+
+
+def llm_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """word2vec-style collocation (phrase) mining (Mikolov et al. 2013
+    §4): score each adjacent token pair by discounted lift
+    ``(c_ab - delta) * N / (c_a * c_b)`` and keep supported,
+    positively-associated pairs — the standard pre-tokenization pass
+    that promotes "machine learning" to one vocabulary unit. The score
+    is PMI's ratio without the log (libm ``ln`` drifts in the last ulp
+    across engines; the ratio of exact integer counts, multiplied then
+    divided as doubles, is correctly-rounded and bit-identical — same
+    transcendental-free stance as ``llm_bigram_lm``).
+
+    Scale: ONE tokenization pass materializes the per-doc token arrays;
+    unigram and bigram counts are two map-side-combinable groupBys over
+    explodes of that relation; the scoring joins shuffle pair counts
+    against vocab-sized unigram counts (gram-hash shuffle, AQE
+    skew-splittable) and the totals ride in as 1-row broadcasts."""
+    docs = t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    arrs = docs.select(
+        "doc_id",
+        F.filter(F.split(F.col("text"), " "), lambda x: x != "").alias(
+            "toks"
+        ),
+    ).localCheckpoint(eager=False)
+    uni = (
+        arrs.select(F.explode("toks").alias("term"))
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("c_term"))
+    )
+    n_tok = uni.agg(F.sum("c_term").alias("n_tokens"))
+    # bigram key is the "a b" string (tokens are space-split, so they
+    # contain no spaces — the join key decodes uniquely); counting grams
+    # then splitting ONLY the surviving pairs keeps the heavy groupBy on
+    # one flat string column
+    pairs = (
+        arrs.select(
+            F.explode(
+                F.expr(
+                    "CASE WHEN size(toks) >= 2 THEN "
+                    "transform(sequence(0, size(toks) - 2), "
+                    "i -> concat_ws(' ', toks[i], toks[i + 1])) "
+                    "ELSE cast(array() AS array<string>) END"
+                )
+            ).alias("gram")
+        )
+        .groupBy("gram")
+        .agg(F.count(F.lit(1)).alias("c_ab"))
+        .filter(F.col("c_ab") >= COLLOC_MIN_PAIR)
+        .select(
+            F.split(F.col("gram"), " ").getItem(0).alias("a"),
+            F.split(F.col("gram"), " ").getItem(1).alias("b"),
+            "c_ab",
+        )
+    )
+    ua = uni.select(F.col("term").alias("a"), F.col("c_term").alias("c_a"))
+    ub = uni.select(F.col("term").alias("b"), F.col("c_term").alias("c_b"))
+    score = (
+        (F.col("c_ab").cast("double") - F.lit(float(COLLOC_DELTA)))
+        * F.col("n_tokens").cast("double")
+        / (F.col("c_a").cast("double") * F.col("c_b").cast("double"))
+    )
+    return (
+        pairs.join(ua, "a")
+        .join(ub, "b")
+        .crossJoin(F.broadcast(n_tok))
+        .select(
+            F.col("a").alias("term_a"),
+            F.col("b").alias("term_b"),
+            F.col("c_ab").cast("long").alias("pair_count"),
+            F.col("c_a").cast("long").alias("count_a"),
+            F.col("c_b").cast("long").alias("count_b"),
+            fquant(score, 6).alias("phrase_score"),
+        )
+        .filter(F.col("phrase_score") > COLLOC_MIN_SCORE)
+    )
+
+
+LLM_COLLOCATIONS_SQL = f"""
+WITH arrs AS MATERIALIZED (
+    SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
+    FROM documents WHERE text IS NOT NULL
+), uni AS MATERIALIZED (
+    SELECT unnest(toks) AS term FROM arrs
+), uc AS MATERIALIZED (
+    SELECT term, COUNT(*) AS c_term FROM uni GROUP BY term
+), nt AS (SELECT SUM(c_term) AS n_tokens FROM uc),
+bi AS (
+    SELECT unnest([toks[i] || ' ' || toks[i + 1]
+                   for i in range(1, len(toks))]) AS gram
+    FROM arrs WHERE len(toks) >= 2
+), pg AS (
+    SELECT gram, COUNT(*) AS c_ab FROM bi GROUP BY gram
+    HAVING COUNT(*) >= {COLLOC_MIN_PAIR}
+), pc AS (
+    SELECT string_split(gram, ' ')[1] AS a, string_split(gram, ' ')[2] AS b,
+           c_ab
+    FROM pg
+)
+SELECT pc.a AS term_a, pc.b AS term_b,
+       CAST(pc.c_ab AS BIGINT) AS pair_count,
+       CAST(ua.c_term AS BIGINT) AS count_a,
+       CAST(ub.c_term AS BIGINT) AS count_b,
+       floor((CAST(pc.c_ab AS DOUBLE) - {float(COLLOC_DELTA)})
+             * CAST(nt.n_tokens AS DOUBLE)
+             / (CAST(ua.c_term AS DOUBLE) * CAST(ub.c_term AS DOUBLE))
+             * 1000000.0) / 1000000.0 AS phrase_score
+FROM pc
+JOIN uc ua ON pc.a = ua.term
+JOIN uc ub ON pc.b = ub.term
+CROSS JOIN nt
+WHERE floor((CAST(pc.c_ab AS DOUBLE) - {float(COLLOC_DELTA)})
+            * CAST(nt.n_tokens AS DOUBLE)
+            / (CAST(ua.c_term AS DOUBLE) * CAST(ub.c_term AS DOUBLE))
+            * 1000000.0) / 1000000.0 > {COLLOC_MIN_SCORE}
+"""
+
+
+# --------------------------------------------------------- llm_vocab_growth
+
+#: Vocabulary checkpoints every this many documents (doc_id order).
+VOCAB_BUCKET = 50
+
+
+def llm_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Heaps-law vocabulary-growth curve over word-TRIGRAM shingles:
+    reading the corpus in doc_id order, how many distinct shingles have
+    appeared by each ``VOCAB_BUCKET``-document checkpoint, and how many
+    are new in that bucket. A flattening curve says the source has
+    stopped contributing novelty — the saturation signal data-mixing
+    weights (llm_mix_weights) act on. Shingles, not unigrams, are the
+    unit: a natural corpus' unigram vocabulary saturates almost
+    immediately (the fixture's ~50-word lexicon is the degenerate
+    case), while the shingle space keeps growing for as long as the
+    corpus genuinely adds novelty — the same unit llm_ngram_novelty
+    scores documents by.
+
+    Scale: shingles shuffle ONCE, as a map-side-combinable
+    groupBy(gram) → MIN(doc_id) (first-occurrence relation is
+    vocabulary-sized, not corpus-sized); the checkpoint histogram and
+    the running total are a groupBy + window over the BUCKET relation
+    (#docs / VOCAB_BUCKET rows). No explode output ever crosses a
+    second shuffle."""
+    from ..operators.text import trigrams
+
+    docs = t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    toks = docs.select(
+        "doc_id", F.explode(trigrams("text")).alias("tok")
+    )
+    first = toks.groupBy("tok").agg(F.min("doc_id").alias("fd"))
+    per = first.groupBy(
+        (F.floor(F.col("fd") / VOCAB_BUCKET) * VOCAB_BUCKET)
+        .cast("long")
+        .alias("doc_bucket")
+    ).agg(F.count(F.lit(1)).alias("new_tokens"))
+    w = Window.orderBy("doc_bucket").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return per.select(
+        "doc_bucket",
+        F.col("new_tokens").cast("long").alias("new_tokens"),
+        F.sum("new_tokens").over(w).cast("long").alias("vocab_size"),
+    )
+
+
+LLM_VOCAB_GROWTH_SQL = f"""
+WITH d AS (
+    SELECT doc_id, string_split(text, ' ') AS toks
+    FROM documents WHERE text IS NOT NULL
+), tok AS (
+    SELECT doc_id,
+           unnest(list_distinct(
+               [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                for i in range(1, len(toks) - 1)])) AS tok
+    FROM d WHERE len(toks) >= 3
+), first AS (
+    SELECT tok, MIN(doc_id) AS fd FROM tok GROUP BY tok
+), per AS (
+    SELECT CAST(floor(fd / {VOCAB_BUCKET}) * {VOCAB_BUCKET} AS BIGINT)
+             AS doc_bucket,
+           COUNT(*) AS new_tokens
+    FROM first GROUP BY 1
+)
+SELECT doc_bucket,
+       CAST(new_tokens AS BIGINT) AS new_tokens,
+       CAST(SUM(new_tokens) OVER (ORDER BY doc_bucket ROWS BETWEEN
+            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS vocab_size
+FROM per
+"""
+
+
+# ---------------------------------------------------------------- mm_phash
+
+PHASH_WIDTH = 64
+
+
+def mm_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Perceptual average-hash signatures over the multimodal payloads
+    plus exact-duplicate grouping: each payload's first 64 body bytes
+    are thresholded against their integer mean into a 64-bit aHash
+    (operators/multimodal.py::phash64 — a real build decodes, resizes
+    to 8×8 luma and thresholds through the same Arrow batch flow), and
+    every signature carries its corpus-wide collision count — identical
+    hashes are the image-dedup candidates, the visual sibling of
+    llm_fingerprint's md5 grouping.
+
+    Scale: mapInPandas is one Arrow pass, O(width) per payload; the
+    collision count is a window over the signature column (one
+    map-side-combinable shuffle on a 64-bit key). The oracle replays
+    the hash bit-for-bit from hex nibbles — integer compares only.
+
+    Completes the multimodal family's dedup story: average-hash signatures
+    whose byte-domain stub is exactly replayable by the hex-nibble oracle
+    (the mm_audio_window discipline)."""
+    from ..operators import multimodal
+
+    docs = t(spark, sf_dir, "documents")
+    sigs = multimodal.phash64(
+        multimodal.synthesize_payloads(docs), width=PHASH_WIDTH
+    )
+    w = Window.partitionBy("phash")
+    return sigs.select(
+        "doc_id",
+        "n_bytes",
+        "mean_b",
+        "phash",
+        F.count(F.lit(1)).over(w).cast("long").alias("n_same_hash"),
+    )
+
+
+MM_PHASH_SQL = f"""
+WITH h AS (
+    SELECT doc_id, hex(encode(text)) AS hx,
+           least(octet_length(encode(text)), {PHASH_WIDTH}) AS nb
+    FROM documents WHERE text IS NOT NULL
+), b AS (
+    SELECT doc_id, nb, CAST(i AS INT) AS i,
+           (strpos('0123456789ABCDEF',
+                   substr(hx, CAST(i * 2 + 1 AS INT), 1)) - 1) * 16
+           + strpos('0123456789ABCDEF',
+                    substr(hx, CAST(i * 2 + 2 AS INT), 1)) - 1 AS v
+    FROM h, UNNEST(range(nb)) u(i)
+), m AS (
+    SELECT doc_id, nb, CAST(SUM(v) AS BIGINT) // nb AS mean_b
+    FROM b GROUP BY doc_id, nb
+), sig AS (
+    SELECT b.doc_id, m.nb, m.mean_b,
+           SUM(CASE WHEN b.v > m.mean_b
+                    THEN CAST(1 AS HUGEINT) << b.i
+                    ELSE CAST(0 AS HUGEINT) END) AS s
+    FROM b JOIN m USING (doc_id)
+    GROUP BY b.doc_id, m.nb, m.mean_b
+), wrapped AS (
+    SELECT doc_id, CAST(nb AS INT) AS n_bytes,
+           CAST(mean_b AS INT) AS mean_b,
+           CAST(CASE WHEN s >= CAST(1 AS HUGEINT) << 63
+                     THEN s - (CAST(1 AS HUGEINT) << 64)
+                     ELSE s END AS BIGINT) AS phash
+    FROM sig
+    UNION ALL
+    -- empty-body payloads (text encodes to 0 bytes): the engine emits
+    -- an all-zero row; the byte explode above yields nothing for them
+    SELECT doc_id, 0, 0, CAST(0 AS BIGINT) FROM h WHERE nb = 0
+)
+SELECT doc_id, n_bytes, mean_b, phash,
+       CAST(COUNT(*) OVER (PARTITION BY phash) AS BIGINT) AS n_same_hash
+FROM wrapped
+"""
+
+
 QUERIES: dict[str, Query] = {
     "llm_text_stats": Query(llm_text_stats, LLM_TEXT_STATS_SQL,
                             "top terms per lang"),
@@ -1251,27 +2877,32 @@ QUERIES: dict[str, Query] = {
     "llm_fingerprint": Query(llm_fingerprint, LLM_FINGERPRINT_SQL,
                              "md5 fingerprint dedup key"),
     "llm_dedup_ngram": Query(llm_dedup_ngram, LLM_DEDUP_NGRAM_SQL,
-                             "exact trigram-Jaccard pairs"),
+                             "exact trigram-Jaccard pairs", eager="compute"),
     "llm_dedup_cluster": Query(llm_dedup_cluster, LLM_DEDUP_CLUSTER_SQL,
-                               "near-dup connected components"),
+                               "near-dup connected components",
+                               eager="compute"),
     "llm_tfidf": Query(llm_tfidf, LLM_TFIDF_SQL,
-                       "top TF-IDF term per document"),
+                       "top TF-IDF term per document", eager="compute"),
     "llm_dedup_editdist": Query(
         llm_dedup_editdist, LLM_DEDUP_EDITDIST_SQL,
         "edit-distance dedup: ngram blocking + Levenshtein verify",
+        eager="compute",
     ),
     "llm_dedup_minhash": Query(llm_dedup_minhash, None,
-                               "MinHash-LSH pairs (rows-only)"),
+                               "MinHash-LSH pairs (rows-only)",
+                               eager="compute"),
     "llm_dedup_simhash": Query(
         llm_dedup_simhash, LLM_DEDUP_SIMHASH_SQL,
         "SimHash band pairs, hash-checked via full oracle-side replay",
     ),
     "llm_dedup_embedding": Query(llm_dedup_embedding, LLM_DEDUP_EMBEDDING_SQL,
-                                 "embedding-cosine near-dups"),
+                                 "embedding-cosine near-dups",
+                                 eager="compute"),
     "llm_sim_search": Query(llm_sim_search, LLM_SIM_SEARCH_SQL,
-                            "brute-force cosine top-k"),
+                            "brute-force cosine top-k", eager="compute"),
     "llm_sim_search_ivf": Query(llm_sim_search_ivf, None,
-                                "IVF approximate top-k (rows-only)"),
+                                "IVF approximate top-k (rows-only)",
+                                eager="compute"),
     "llm_decontaminate": Query(llm_decontaminate, LLM_DECONTAMINATE_SQL,
                                "8-gram eval-set decontamination"),
     "llm_pii_scrub": Query(llm_pii_scrub, LLM_PII_SCRUB_SQL,
@@ -1296,4 +2927,88 @@ QUERIES: dict[str, Query] = {
                            "context-window chunking with overlap"),
     "llm_pack_sequences": Query(llm_pack_sequences, LLM_PACK_SEQUENCES_SQL,
                                 "greedy sequence packing into token bins"),
+    "llm_knn_join": Query(
+        llm_knn_join, LLM_KNN_JOIN_SQL,
+        "batch k-NN join, two-stage partial top-k",
+        eager="compute",
+    ),
+    "llm_cross_dedup": Query(
+        llm_cross_dedup, LLM_CROSS_DEDUP_SQL,
+        "snapshot-incremental fingerprint dedup",
+    ),
+    "llm_bigram_lm": Query(
+        llm_bigram_lm, LLM_BIGRAM_LM_SQL,
+        "bigram statistical-LM quality score (transcendental-free)",
+    ),
+    "llm_data_split": Query(
+        llm_data_split, LLM_DATA_SPLIT_SQL,
+        "deterministic train/val/test split assignment",
+    ),
+    "llm_sim_search_pq": Query(
+        llm_sim_search_pq, None, "PQ ANN with ADC scoring + exact re-rank",
+        eager="compute",
+    ),
+    "llm_bpe_pairs": Query(
+        llm_bpe_pairs, LLM_BPE_PAIRS_SQL,
+        "BPE merge-candidate counting (adjacent token pairs, top-20)",
+    ),
+    "llm_curation_pipeline": Query(
+        llm_curation_pipeline, LLM_CURATION_PIPELINE_SQL,
+        "quality gate -> exact dedup -> rebalance -> split, one plan",
+    ),
+    "llm_mix_weights": Query(
+        llm_mix_weights, LLM_MIX_WEIGHTS_SQL,
+        "capped uniform-target language mixture reweighting",
+    ),
+    "llm_winnow_fingerprint": Query(
+        llm_winnow_fingerprint, LLM_WINNOW_SQL,
+        "winnowing local fingerprints (SIGMOD 2003)"),
+    "llm_hard_negatives": Query(
+        llm_hard_negatives, _hn_sql(),
+        "label-aware hard-negative mining (contrastive training pairs)",
+        eager="compute"),
+    "llm_span_corruption": Query(
+        llm_span_corruption, LLM_SPAN_CORRUPTION_SQL,
+        "T5-style deterministic span corruption (input/target pairs)"),
+    "llm_bpe_train": Query(
+        llm_bpe_train, LLM_BPE_TRAIN_SQL,
+        "3 exact distributed BPE merge iterations (unrolled SQL oracle)",
+        eager="compute"),
+    "llm_bpe_encode": Query(
+        llm_bpe_encode, LLM_BPE_ENCODE_SQL,
+        "apply learned BPE merges: per-doc encoded-sequence stats + hash",
+        eager="compute"),
+    "llm_paragraph_dedup": Query(
+        llm_paragraph_dedup, LLM_PARAGRAPH_DEDUP_SQL,
+        "C4-style cross-doc boilerplate segment removal + reassembly",
+    ),
+    "llm_dedup_apply": Query(
+        llm_dedup_apply, LLM_DEDUP_APPLY_SQL,
+        "dedup application: one canonical survivor per dup cluster",
+        eager="compute",
+    ),
+    "llm_ngram_novelty": Query(
+        llm_ngram_novelty, LLM_NGRAM_NOVELTY_SQL,
+        "fraction of per-doc shingles unique in the corpus (df=1)",
+    ),
+    "llm_prefix_dedup": Query(
+        llm_prefix_dedup, LLM_PREFIX_DEDUP_SQL,
+        "prefix-truncation duplicates via 32-char block join + verify",
+    ),
+    "mm_scene_cut": Query(
+        mm_scene_cut, MM_SCENE_CUT_SQL,
+        "frame-delta scene-change detection over binary payloads",
+    ),
+    "llm_collocations": Query(
+        llm_collocations, LLM_COLLOCATIONS_SQL,
+        "word2vec phrase mining by discounted lift (transcendental-free)",
+    ),
+    "llm_vocab_growth": Query(
+        llm_vocab_growth, LLM_VOCAB_GROWTH_SQL,
+        "Heaps-law vocabulary saturation curve per doc checkpoint",
+    ),
+    "mm_phash": Query(
+        mm_phash, MM_PHASH_SQL,
+        "average-hash payload signatures + collision dedup counts",
+    ),
 }

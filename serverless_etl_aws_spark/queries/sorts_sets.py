@@ -1,4 +1,5 @@
-"""Global sort+limit and set operations.
+"""Global sort+limit and set operations (key prefixes ``sort_``, ``set_``),
+including the multiset ``INTERSECT ALL`` / ``EXCEPT ALL`` forms.
 
 Scale notes (100 TB): ``orderBy().limit(k)`` compiles to ``TakeOrderedAndProject``
 — each partition keeps only its local top-k and the driver merges k·p rows,
@@ -102,6 +103,53 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'P'
 """
 
 
+# ------------------------------------------------------------- set ops ALL
+
+def _multisets(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Two overlapping lineitem projections with genuine duplicates —
+    (suppkey, linestatus) repeats across lines, so ALL semantics differ
+    observably from DISTINCT semantics."""
+    li = t(spark, sf_dir, "lineitem")
+    a = li.filter(F.col("l_returnflag") == "R").select(
+        "l_suppkey", "l_linestatus"
+    )
+    b = li.filter(F.col("l_quantity") > 25).select("l_suppkey", "l_linestatus")
+    return a, b
+
+
+def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INTERSECT ALL (multiset): each row kept min(count_a, count_b) times.
+
+    Scale: compiles to a single hash aggregation per side plus one
+    shuffle on the row value — no sort, no join explosion; identical
+    shuffle shape to set_intersect but with count bookkeeping."""
+    a, b = _multisets(spark, sf_dir)
+    return a.intersectAll(b)
+
+
+SET_INTERSECT_ALL_SQL = """
+SELECT l_suppkey, l_linestatus FROM lineitem WHERE l_returnflag = 'R'
+INTERSECT ALL
+SELECT l_suppkey, l_linestatus FROM lineitem WHERE l_quantity > 25
+"""
+
+
+def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXCEPT ALL (multiset difference): row kept count_a - count_b times.
+    Operands are the larger-minus-smaller orientation so the multiset
+    difference is non-empty (the reverse orientation is dominated and
+    would vacuously return 0 rows)."""
+    a, b = _multisets(spark, sf_dir)
+    return b.exceptAll(a)
+
+
+SET_EXCEPT_ALL_SQL = """
+SELECT l_suppkey, l_linestatus FROM lineitem WHERE l_quantity > 25
+EXCEPT ALL
+SELECT l_suppkey, l_linestatus FROM lineitem WHERE l_returnflag = 'R'
+"""
+
+
 QUERIES: dict[str, Query] = {
     "sort_limit": Query(sort_limit, SORT_LIMIT_SQL, "TakeOrderedAndProject"),
     "set_union_all": Query(set_union_all, SET_UNION_ALL_SQL, "UNION ALL"),
@@ -110,4 +158,9 @@ QUERIES: dict[str, Query] = {
     ),
     "set_intersect": Query(set_intersect, SET_INTERSECT_SQL, "INTERSECT"),
     "set_except": Query(set_except, SET_EXCEPT_SQL, "EXCEPT"),
+    "set_intersect_all": Query(
+        set_intersect_all, SET_INTERSECT_ALL_SQL,
+        "multiset INTERSECT ALL"),
+    "set_except_all": Query(
+        set_except_all, SET_EXCEPT_ALL_SQL, "multiset EXCEPT ALL"),
 }

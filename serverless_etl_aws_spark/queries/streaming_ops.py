@@ -1,9 +1,13 @@
-"""Streaming contract keys (SURVEY.md §2B `stream_*`): real Structured
-Streaming jobs (readStream → window agg → memory sink, Trigger.AvailableNow)
+"""Streaming operators (key prefix ``stream_``): real Structured Streaming
+jobs (readStream → window agg → memory sink, Trigger.AvailableNow)
 whose drained output is batch-equivalent, so DuckDB can check tumbling /
 sliding / session results; late-data is checked against the relational
 max-event-time watermark rule (batch boundaries are pinned, so the final
-watermark — and therefore the emitted window set — is deterministic)."""
+watermark — and therefore the emitted window set — is deterministic).
+
+Every key drains its stream while the DataFrame is built
+(``eager="state"``).
+"""
 
 from __future__ import annotations
 
@@ -12,18 +16,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..streaming.windows import (
-    split_parquet_by_mod,
     late_data_counts,
     run_stream_to_memory,
     session_counts,
     sliding_counts,
+    split_parquet_by_mod,
     stage_events_dir,
     tumbling_counts,
 )
 from . import Query
-from ._util import scratch_root
-
-SCRATCH = scratch_root()
+from ._util import SCRATCH
 
 
 def _stream(spark: SparkSession, sf_dir: str, sub: str, n_files: int = 1):
@@ -589,28 +591,37 @@ QUERIES: dict[str, Query] = {
     "stream_pydatasource": Query(
         stream_pydatasource, STREAM_PYDS_SQL,
         "custom Python streaming source drained exactly-once",
+        eager="state",
     ),
     "stream_tumbling": Query(stream_tumbling, STREAM_TUMBLING_SQL,
-                             "1h tumbling counts (streaming)"),
+                             "1h tumbling counts (streaming)", eager="state"),
     "stream_sliding": Query(stream_sliding, STREAM_SLIDING_SQL,
-                            "1h/15min sliding counts (streaming)"),
+                            "1h/15min sliding counts (streaming)",
+                            eager="state"),
     "stream_session": Query(stream_session, STREAM_SESSION_SQL,
-                            "30min-gap session windows (streaming)"),
+                            "30min-gap session windows (streaming)",
+                            eager="state"),
     "stream_late_data": Query(stream_late_data, STREAM_LATE_DATA_SQL,
-                              "watermark closed-window emission"),
+                              "watermark closed-window emission",
+                              eager="state"),
     "stream_stateful": Query(
         stream_stateful, STREAM_STATEFUL_SQL,
         "applyInPandasWithState running profile, hash-checked via the "
         "pinned-batch relational rule + integer-cent accounting",
+        eager="state",
     ),
     "stream_dedup": Query(stream_dedup, STREAM_DEDUP_SQL,
-                          "streaming exact dedup (append mode)"),
+                          "streaming exact dedup (append mode)",
+                          eager="state"),
     "stream_join": Query(stream_join, STREAM_JOIN_SQL,
-                         "stream-static broadcast enrichment join"),
+                         "stream-static broadcast enrichment join",
+                         eager="state"),
     "stream_cdc": Query(stream_cdc, STREAM_CDC_SQL,
-                        "version-resolved CDC apply with tombstones"),
+                        "version-resolved CDC apply with tombstones",
+                        eager="state"),
     "stream_stream_join": Query(
         stream_stream_join, STREAM_STREAM_JOIN_SQL,
         "watermarked stream-stream interval join (bounded state)",
+        eager="state",
     ),
 }

@@ -1,4 +1,5 @@
-"""User-defined function surface: scalar UDF, grouped UDAF, table UDTF.
+"""User-defined function surface (key prefixes ``udf_``, ``udaf_``,
+``udtf_``): scalar UDF, grouped UDAF, table UDTF.
 
 Scale notes (100 TB): the scalar UDF is an Arrow-batched ``pandas_udf`` —
 row-at-a-time Python UDFs pay per-row serialization (~10-100× slower) and
@@ -12,7 +13,6 @@ semantic gain.
 from __future__ import annotations
 
 import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -251,17 +251,6 @@ FROM o FULL OUTER JOIN l USING (month)
 """
 
 
-QUERIES: dict[str, Query] = {
-    "udf_scalar": Query(udf_scalar, UDF_SCALAR_SQL, "pandas UDF normalize"),
-    "udaf_grouped": Query(udaf_grouped, UDAF_GROUPED_SQL, "applyInPandas UDAF"),
-    "udtf_explode": Query(udtf_explode, UDTF_EXPLODE_SQL, "posexplode UDTF"),
-    "udf_cogrouped": Query(
-        udf_cogrouped, UDF_COGROUPED_SQL,
-        "cogrouped applyInPandas per-key reconciliation",
-    ),
-}
-
-
 UDTF_CHUNK_W = 8
 
 
@@ -314,7 +303,17 @@ SELECT doc_id,
 FROM d, UNNEST(range(CAST(ceil(len(toks) / {UDTF_CHUNK_W}.0) AS BIGINT))) u(i)
 """
 
-QUERIES["udtf_python"] = Query(
-    udtf_python, UDTF_PYTHON_SQL,
-    "real Python @udtf table function via LATERAL join",
-)
+
+QUERIES: dict[str, Query] = {
+    "udf_scalar": Query(udf_scalar, UDF_SCALAR_SQL, "pandas UDF normalize"),
+    "udaf_grouped": Query(udaf_grouped, UDAF_GROUPED_SQL, "applyInPandas UDAF"),
+    "udtf_explode": Query(udtf_explode, UDTF_EXPLODE_SQL, "posexplode UDTF"),
+    "udf_cogrouped": Query(
+        udf_cogrouped, UDF_COGROUPED_SQL,
+        "cogrouped applyInPandas per-key reconciliation",
+    ),
+    "udtf_python": Query(
+        udtf_python, UDTF_PYTHON_SQL,
+        "real Python @udtf table function via LATERAL join",
+    ),
+}

@@ -110,11 +110,9 @@ def stage_events_dir(
 #: never coalesces stateful exchanges, so every micro-batch pays one state
 #: store + (for pandas ops) one Python worker round PER partition. At
 #: fixture scale 32 near-empty state partitions are pure overhead (measured
-#: 11.4 s → 4.3 s on stream_stateful by dropping 32 → 8); on a cluster set
-#: SPARK_GRAFT_STREAM_PARTITIONS to ~2× total cores instead.
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-)
+#: 11.4 s → 4.3 s on stream_stateful by dropping 32 → 8); on a cluster pass
+#: ``state_partitions`` of ~2× total cores instead.
+STREAM_STATE_PARTITIONS = 8
 
 
 def run_stream_to_memory(

@@ -17,7 +17,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from serverless_etl_aws_spark.queries._util import t
-from serverless_etl_aws_spark.queries.extras9 import BPE_ITERS, llm_bpe_train
+from serverless_etl_aws_spark.queries.llm import BPE_ITERS, llm_bpe_train
 
 SF = "/root/testdata/sf0.001"
 
@@ -92,7 +92,7 @@ def test_bpe_parallel_merge_equals_sequential_on_runs(docs, bpe_spark):
     spark = bpe_spark
     rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    import serverless_etl_aws_spark.queries.extras9 as e9
+    import serverless_etl_aws_spark.queries.llm as llm_mod
     import serverless_etl_aws_spark.queries._util as util
 
     orig_t = util.t
@@ -101,14 +101,14 @@ def test_bpe_parallel_merge_equals_sequential_on_runs(docs, bpe_spark):
         # cache keys on (session, sf_dir) — swapping the corpus behind a
         # fixed sf_dir requires dropping it (production code never does
         # this; the monkeypatch does, once per hypothesis example)
-        e9._BPE_CACHE.clear()
-        e9.t = lambda s, sf, name: df
+        llm_mod._BPE_CACHE.clear()
+        llm_mod.t = lambda s, sf, name: df
         got = [
             (r.pair_a, r.pair_b, r.pair_count, r.merges, r.tokens_after)
-            for r in e9.llm_bpe_train(spark, "ignored").orderBy("it").collect()
+            for r in llm_mod.llm_bpe_train(spark, "ignored").orderBy("it").collect()
         ]
     finally:
-        e9.t = orig_t
+        llm_mod.t = orig_t
     expected, _ = sequential_bpe([list(d) for d in docs], BPE_ITERS)
     assert got == expected
 
@@ -119,24 +119,24 @@ def test_bpe_pair_exhaustion_matches_oracle(spark):
     too (a review caught 1 Spark row vs 3 oracle rows here)."""
     import duckdb
 
-    import serverless_etl_aws_spark.queries.extras9 as e9
+    import serverless_etl_aws_spark.queries.llm as llm_mod
 
     df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-    orig = e9.t
+    orig = llm_mod.t
     try:
-        e9._BPE_CACHE.clear()  # corpus swapped behind a fixed sf_dir
-        e9.t = lambda s, sf, name: df
+        llm_mod._BPE_CACHE.clear()  # corpus swapped behind a fixed sf_dir
+        llm_mod.t = lambda s, sf, name: df
         got = [
             (r.it, r.pair_a, r.pair_b, r.pair_count, r.merges,
              r.tokens_after)
-            for r in e9.llm_bpe_train(spark, "ignored").collect()
+            for r in llm_mod.llm_bpe_train(spark, "ignored").collect()
         ]
     finally:
-        e9.t = orig
+        llm_mod.t = orig
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT 1::BIGINT AS doc_id, 'a b' AS text"
     )
-    oracle = con.execute(e9.LLM_BPE_TRAIN_SQL).fetchall()
+    oracle = con.execute(llm_mod.LLM_BPE_TRAIN_SQL).fetchall()
     assert got == [(1, "a", "b", 1, 1, 1)]
     assert [tuple(r) for r in oracle] == got

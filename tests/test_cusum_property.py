@@ -1,6 +1,6 @@
 """Property + engine tests for the CUSUM drawdown identity.
 
-``ts_cusum`` (queries/extras15.py) replaces the textbook recursion
+``ts_cusum`` (queries/ts.py) replaces the textbook recursion
 ``S_t = max(0, S_{t-1} + y_t)`` with the window-parallel form
 ``S_t = P_t - min(0, min_{j<=t} P_j)`` over the prefix sum ``P``. The
 whole operator is only correct if that identity holds for EVERY input
@@ -63,7 +63,7 @@ def test_engine_cusum_matches_sequential_fold(spark, sf_dir):
     between the identity and the engine's actual window/decimal
     plumbing (ordering, partitioning, clamping, scaled-int cast)."""
     from serverless_etl_aws_spark.catalog import load_table
-    from serverless_etl_aws_spark.queries.extras15 import CUSUM_K, ts_cusum
+    from serverless_etl_aws_spark.queries.ts import CUSUM_K, ts_cusum
 
     rows = (
         load_table(spark, sf_dir, "events")

@@ -19,16 +19,16 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from serverless_etl_aws_spark.queries.extras24 import AB_CONV_MIN
-from serverless_etl_aws_spark.queries.extras31 import (
-    AGG_WEIGHTED_MEDIAN_SQL,
+from serverless_etl_aws_spark.queries.ml import (
+    AB_CONV_MIN,
     ML_DIFF_IN_DIFF_SQL,
 )
-from serverless_etl_aws_spark.queries.extras33 import TS_ANOVA_WEEKDAY_SQL
-from serverless_etl_aws_spark.queries.extras34 import (
+from serverless_etl_aws_spark.queries.aggregates import (
+    AGG_WEIGHTED_MEDIAN_SQL,
     AGG_MEDIAN_CI_SQL,
     MEDIAN_CI_Z,
 )
+from serverless_etl_aws_spark.queries.ts import TS_ANOVA_WEEKDAY_SQL
 
 
 def fq(x: float, scale: int) -> float:
@@ -300,17 +300,17 @@ def test_anova_weekday_matches_textbook(rows):
 # degenerate-sensitive formulas (p∈{0,1} arms, single-day series,
 # all-ties pairs, single-type days).
 
-from serverless_etl_aws_spark.queries.extras13 import AGG_GINI_SQL
-from serverless_etl_aws_spark.queries.extras20 import (
+from serverless_etl_aws_spark.queries.aggregates import (
+    AGG_GINI_SQL,
     AGG_KS_TEST_SQL,
-    POS_LABEL,
 )
-from serverless_etl_aws_spark.queries.extras26 import (
+from serverless_etl_aws_spark.queries._util import POS_LABEL
+from serverless_etl_aws_spark.queries.ml import (
     ML_WILSON_CI_SQL,
     WILSON_THRESHOLD,
     WILSON_Z,
+    ML_KENDALL_TAU_SQL,
 )
-from serverless_etl_aws_spark.queries.extras29 import ML_KENDALL_TAU_SQL
 
 #: The oracle CASTs the z literals to DOUBLE before multiplying, so z²
 #: is the IEEE product on both engines (a bare 1.96*1.96 would fold in

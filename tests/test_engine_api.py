@@ -78,34 +78,37 @@ def test_cli_tables_and_sql(capsys, sf_dir):
 def test_registry_contract_keys_first():
     """The driver's correctness check walks queries() in insertion order
     and may stop early — every SURVEY §2B contract key must sit in the
-    head of the registry, followed by the graded LLM/mm extensions."""
+    head of the registry, followed by the extension keys in manifest
+    order (tests/registry_manifest.json freezes that order)."""
+    import json
+    import os
+
     from serverless_etl_aws_spark.queries import (
         CONTRACT_2B,
-        PRIORITY_EXT,
+        EXTENSION_KEYS,
         build_registry,
     )
 
     keys = list(build_registry())
     assert len(CONTRACT_2B) == 47
     assert keys[: len(CONTRACT_2B)] == list(CONTRACT_2B)
-    head = len(CONTRACT_2B) + len(PRIORITY_EXT)
-    assert keys[len(CONTRACT_2B): head] == list(PRIORITY_EXT)
+    assert keys == [*CONTRACT_2B, *EXTENSION_KEYS]
+    manifest = os.path.join(os.path.dirname(__file__), "registry_manifest.json")
+    with open(manifest) as fh:
+        assert keys == [row["key"] for row in json.load(fh)]
 
 
 def test_driver_audit_window_is_contract_plus_rotation():
     """The driver's CORRECTNESS audit covers exactly the first 50 registry
-    keys.  Pin that window to {47 §2B contract keys} ∪ {the current
-    3-slot rotation} so a refactor can't silently evict a contract key
-    from the audited window or reorder a rotated key out of it."""
+    keys.  Pin that window to the 47 §2B contract keys followed by the
+    three extension audit slots, so a refactor can't silently evict a
+    contract key from the audited window or reorder a key out of it."""
     from serverless_etl_aws_spark.queries import CONTRACT_2B, build_registry
 
-    ROUND14_ROTATION = (
-        "graph_bfs", "sample_weighted", "agg_mode",
-    )
+    AUDIT_SLOTS = ("graph_bfs", "sample_weighted", "agg_mode")
     window = list(build_registry())[:50]
-    assert set(window) == set(CONTRACT_2B) | set(ROUND14_ROTATION)
-    # and the rotation occupies slots 48-50 specifically
-    assert window[47:] == list(ROUND14_ROTATION)
+    assert set(window) == set(CONTRACT_2B) | set(AUDIT_SLOTS)
+    assert window == [*CONTRACT_2B, *AUDIT_SLOTS]
 
 
 def test_engine_explain_registry_key_and_sql(spark, sf_dir):
@@ -240,3 +243,19 @@ def test_turkish_casing_hazard_is_real_and_engine_avoids_it(spark):
         "pre-uppercased — a lowercase value dies under a tr_TR JVM"
     )
     assert '"partitionOverwriteMode", "dynamic"' not in src
+
+
+def test_session_confs_agree_between_get_spark_and_tune_for_session(spark):
+    """One conf table serves both session paths: every shared conf a
+    get_spark() session starts with reads back unchanged after
+    tune_for_session re-applies the table at runtime."""
+    from serverless_etl_aws_spark.session import SESSION_CONFS, tune_for_session
+
+    before = {k: spark.conf.get(k) for k in SESSION_CONFS}
+    assert before == SESSION_CONFS
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        tune_for_session(spark)
+        assert {k: spark.conf.get(k) for k in SESSION_CONFS} == before
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle)

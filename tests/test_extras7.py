@@ -11,12 +11,14 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from serverless_etl_aws_spark.queries._util import t
-from serverless_etl_aws_spark.queries.extras7 import (
+from serverless_etl_aws_spark.queries.llm import (
     WINNOW_K,
     WINNOW_W,
-    graph_triangles,
     llm_winnow_fingerprint,
-    ml_linreg,
+)
+from serverless_etl_aws_spark.queries.graph import graph_triangles
+from serverless_etl_aws_spark.queries.ml import ml_linreg
+from serverless_etl_aws_spark.queries.sorts_sets import (
     set_except_all,
     set_intersect_all,
 )

@@ -13,11 +13,11 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from serverless_etl_aws_spark.queries._util import t
-from serverless_etl_aws_spark.queries.extras8 import (
+from serverless_etl_aws_spark.queries.joins import (
     BIN_DAYS,
     join_interval_overlap,
 )
-from serverless_etl_aws_spark.queries.extras9 import llm_span_corruption
+from serverless_etl_aws_spark.queries.llm import llm_span_corruption
 
 SF = "/root/testdata/sf0.001"
 

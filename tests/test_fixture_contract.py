@@ -242,12 +242,12 @@ def test_embedding_label_blocks_stay_below_dedup_exact_path_cap():
 
 def test_event_type_labels_match_pinned_vocabulary():
     """ml_auc's one-vs-rest pivot pins EVENT_TYPES at compile time
-    (queries/extras18.py); a sixth label in the data would count as a
+    (queries/ml.py); a sixth label in the data would count as a
     negative for EVERY class on BOTH engines, so the oracle-parity gate
     is structurally blind to label-set drift (ADVICE r6). Fail loudly
     here instead — the key also surfaces the out-of-vocabulary row count
     as an ``n_other`` output column, pinned to 0 by this same contract."""
-    from serverless_etl_aws_spark.queries.extras18 import EVENT_TYPES
+    from serverless_etl_aws_spark.queries.ml import EVENT_TYPES
 
     pinned = set(EVENT_TYPES)
     dirs = _sf_dirs()

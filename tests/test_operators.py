@@ -445,8 +445,8 @@ def test_compaction_reduces_file_count(spark, sf_dir):
     the 64 MB target (tiny fixture bytes → 1 output file)."""
     import os
 
-    from serverless_etl_aws_spark.queries.extras3 import (
-        SCRATCH,
+    from serverless_etl_aws_spark.queries._util import SCRATCH
+    from serverless_etl_aws_spark.queries.pipeline_ops import (
         maintenance_compact,
     )
 
@@ -1003,7 +1003,7 @@ def test_skew_kurt_guard_fires_on_post_quantization_boundary(spark, tmp_path):
                 f"/root/testdata/sf0.001/{t}.parquet", str(d / f"{t}.parquet")
             )
 
-    from serverless_etl_aws_spark.queries.extras16 import agg_skew_kurt
+    from serverless_etl_aws_spark.queries.aggregates import agg_skew_kurt
 
     bad = tmp_path / "boundary"
     write_events(bad, 99999.99996)  # rounds to 100000.0000 in (9,4)

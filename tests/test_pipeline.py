@@ -267,6 +267,11 @@ def test_rollup_refresh_guards_partition_cardinality(spark, tmp_path):
     batch = spark.range(50).withColumnRenamed("id", "row_id")
     with pytest.raises(ValueError, match="does not look like a partition"):
         roll.refresh_for_batch(batch)
+    with pytest.raises(ValueError, match="does not look like a partition"):
+        roll.upsert(batch, merge=lambda df: df)
+    # a batch at the cap still goes through
+    at_cap = spark.range(10).selectExpr("id AS row_id", "1 AS n")
+    assert roll.upsert(at_cap, merge=lambda df: df) == 10
 
 
 def test_warehouse_export_round_trip(spark, tmp_path, sf_dir):

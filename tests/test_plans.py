@@ -83,7 +83,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     """With broadcast off (the 100 TB fact⋈fact regime), same-bucketed
     tables sort-merge-join with zero Exchange on either side."""
     from serverless_etl_aws_spark.operators.skew import bucketed_join
-    from serverless_etl_aws_spark.queries.extras import join_bucketed
+    from serverless_etl_aws_spark.queries.joins import join_bucketed
 
     join_bucketed(spark, sf_dir)  # writes + registers the bucketed tables
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -144,7 +144,7 @@ def test_knn_join_probes_broadcast_no_corpus_shuffle(spark, sf_dir):
     partial aggregate somewhere in its subtree (i.e. rows are aggregated
     before they shuffle; the scored corpus×probes product itself never
     moves)."""
-    from serverless_etl_aws_spark.queries.extras3 import llm_knn_join
+    from serverless_etl_aws_spark.queries.llm import llm_knn_join
 
     root = llm_knn_join(spark, sf_dir)._jdf.queryExecution().executedPlan()
     names = [node_name(n) for n in walk_plan(root)]
@@ -169,7 +169,7 @@ def test_aqe_skew_join_splits_partitions(spark, sf_dir):
     broadcast disabled and test-sized skew thresholds, must mark the
     sort-merge join skew-handled (``skew=true``) — i.e. the oversized
     shuffle partition was split at runtime rather than landing on one
-    task. Manual salting (join_salted, queries/extras.py) remains the
+    task. Manual salting (join_salted, queries/joins.py) remains the
     belt-and-suspenders path; this pins the automatic one."""
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -218,7 +218,9 @@ def test_aqe_skew_join_splits_partitions(spark, sf_dir):
 def test_compaction_plan_has_no_shuffle(spark, sf_dir):
     """The compaction rewrite must be coalesce (merge in place), never a
     full exchange: read fragmented → coalesce(n) plans zero Exchange."""
-    from serverless_etl_aws_spark.queries.extras3 import maintenance_compact
+    from serverless_etl_aws_spark.queries.pipeline_ops import (
+        maintenance_compact,
+    )
 
     maintenance_compact(spark, sf_dir).collect()  # stages the scratch dirs
     # the staging dir this call actually produced (deterministic hook;
@@ -234,7 +236,7 @@ def test_dq_expectations_single_pass_per_table(spark, sf_dir):
     lineitem parquet exactly once (plus one scan for the distinct-key
     rule's aggregate — same scan node, so ≤ 2 file scans total), and
     events exactly once."""
-    from serverless_etl_aws_spark.queries.extras3 import dq_expectations
+    from serverless_etl_aws_spark.queries.dq import dq_expectations
 
     plan = plan_of(dq_expectations(spark, sf_dir))
     assert plan.count("lineitem.parquet") <= 2, plan
@@ -269,8 +271,8 @@ def test_zorder_layout_enables_file_pruning(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from serverless_etl_aws_spark.queries.extras5 import (
-        SCRATCH,
+    from serverless_etl_aws_spark.queries._util import SCRATCH
+    from serverless_etl_aws_spark.queries.pipeline_ops import (
         maintenance_zorder,
     )
 
@@ -320,7 +322,7 @@ def test_ts_resample_spine_join_broadcasts(spark, sf_dir):
     """The calendar-spine left join must build on the broadcast daily
     aggregate (O(days x types)), never shuffle the spine against it as
     a sort-merge join."""
-    from serverless_etl_aws_spark.queries.extras5 import ts_resample
+    from serverless_etl_aws_spark.queries.ts import ts_resample
 
     plan = plan_of(ts_resample(spark, sf_dir))
     assert "BroadcastHashJoin" in plan, plan
@@ -332,7 +334,7 @@ def test_dpp_prunes_fact_partitions(spark, sf_dir):
     carry a dynamicpruningexpression in its PartitionFilters (runtime
     reuse of the broadcast dim as a partition filter). Without it the
     key still returns correct rows - by reading every partition."""
-    from serverless_etl_aws_spark.queries.extras6 import join_dpp
+    from serverless_etl_aws_spark.queries.joins import join_dpp
 
     df = join_dpp(spark, sf_dir)
     plan = formatted(df)
@@ -343,7 +345,7 @@ def test_curation_pipeline_reads_corpus_once(spark, sf_dir):
     """llm_curation_pipeline's selling point is the fused plan: quality
     gate, fingerprint dedup, rebalance and split must ride ONE scan of
     the documents table (a job-per-step pipeline reads it three times)."""
-    from serverless_etl_aws_spark.queries.extras6 import llm_curation_pipeline
+    from serverless_etl_aws_spark.queries.llm import llm_curation_pipeline
 
     plan = plan_of(llm_curation_pipeline(spark, sf_dir))
     assert plan.count("documents.parquet") == 1, plan
@@ -353,7 +355,7 @@ def test_triangles_reuse_edge_list_no_repeat_fact_join(spark, sf_dir):
     """graph_triangles' three-way self-join must run on the checkpointed
     edge list (RDD scans), never re-derive the 4-way fact join per side —
     at 100 TB that would triple the most expensive stage."""
-    from serverless_etl_aws_spark.queries.extras7 import graph_triangles
+    from serverless_etl_aws_spark.queries.graph import graph_triangles
 
     plan = plan_of(graph_triangles(spark, sf_dir))
     assert "FileScan" not in plan, plan
@@ -364,7 +366,7 @@ def test_linreg_aggregates_partially(spark, sf_dir):
     """ml_linreg's sufficient statistics must ride map-side partial
     aggregation (partial + final HashAggregate pairs) so shuffle volume
     is O(groups), not O(rows)."""
-    from serverless_etl_aws_spark.queries.extras7 import ml_linreg
+    from serverless_etl_aws_spark.queries.ml import ml_linreg
 
     plan = plan_of(ml_linreg(spark, sf_dir))
     assert plan.count("HashAggregate") >= 4, plan
@@ -375,7 +377,7 @@ def test_winnow_single_scan_intra_doc_windows(spark, sf_dir):
     """llm_winnow_fingerprint must read documents exactly once and keep
     the window work partitioned by doc_id — no cross-document shuffle
     beyond the doc_id hash partitioning."""
-    from serverless_etl_aws_spark.queries.extras7 import llm_winnow_fingerprint
+    from serverless_etl_aws_spark.queries.llm import llm_winnow_fingerprint
 
     plan = plan_of(llm_winnow_fingerprint(spark, sf_dir))
     assert plan.count("FileScan") == 1, plan
@@ -386,7 +388,7 @@ def test_interpolate_spine_join_broadcasts(spark, sf_dir):
     """ts_interpolate shares ts_resample's contract: the daily aggregate
     broadcasts into the spine join; the neighbor windows then run without
     re-shuffling."""
-    from serverless_etl_aws_spark.queries.extras7 import ts_interpolate
+    from serverless_etl_aws_spark.queries.ts import ts_interpolate
 
     plan = plan_of(ts_interpolate(spark, sf_dir))
     assert "BroadcastHashJoin" in plan, plan
@@ -398,7 +400,7 @@ def test_interval_overlap_is_equi_join_not_nested_loop(spark, sf_dir):
     bin-bucketed formulation must join on the bin as an equi-join —
     a BroadcastNestedLoopJoin/CartesianProduct here means the rewrite
     regressed to the O(n*m) comparison it was built to avoid."""
-    from serverless_etl_aws_spark.queries.extras8 import join_interval_overlap
+    from serverless_etl_aws_spark.queries.joins import join_interval_overlap
 
     plan = plan_of(join_interval_overlap(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -412,7 +414,7 @@ def test_rolling_zscore_two_exchanges_max(spark, sf_dir):
     """ts_rolling_zscore is one aggregation shuffle plus one window
     re-partition at most; the windowed sufficient statistics must not
     introduce further exchanges."""
-    from serverless_etl_aws_spark.queries.extras8 import ts_rolling_zscore
+    from serverless_etl_aws_spark.queries.ts import ts_rolling_zscore
 
     plan = plan_of(ts_rolling_zscore(spark, sf_dir))
     assert plan.count("Exchange") <= 2, plan
@@ -424,7 +426,7 @@ def test_paragraph_dedup_boilerplate_moves_hashes_not_text(spark, sf_dir):
     doc_id), and the segment text re-joins via anti-join afterwards. A
     plan that grouped by the raw segment string would shuffle the corpus
     text twice."""
-    from serverless_etl_aws_spark.queries.extras11 import llm_paragraph_dedup
+    from serverless_etl_aws_spark.queries.llm import llm_paragraph_dedup
 
     plan = plan_of(llm_paragraph_dedup(spark, sf_dir))
     assert "CartesianProduct" not in plan
@@ -437,7 +439,7 @@ def test_heavy_hitters_candidates_and_total_broadcast(spark, sf_dir):
     candidate list and the 1-row total — BOTH must broadcast; shuffling
     the token stream to meet a ≤K×partitions candidate list would defeat
     the sketch."""
-    from serverless_etl_aws_spark.queries.extras11 import agg_heavy_hitters
+    from serverless_etl_aws_spark.queries.aggregates import agg_heavy_hitters
 
     plan = plan_of(agg_heavy_hitters(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 1
@@ -450,7 +452,9 @@ def test_analyze_split_keeps_minmax_in_codegen(spark, sf_dir):
     the Expand-based multi-distinct aggregate (interpreted fallback,
     measured 5x slower) — the plan carries a separate codegen'd scan
     pass joined 1x1."""
-    from serverless_etl_aws_spark.queries.extras11 import maintenance_analyze
+    from serverless_etl_aws_spark.queries.pipeline_ops import (
+        maintenance_analyze,
+    )
 
     plan = plan_of(maintenance_analyze(spark, sf_dir))
     assert "Expand" in plan                      # the NDV pass
@@ -463,7 +467,7 @@ def test_analyze_split_keeps_minmax_in_codegen(spark, sf_dir):
 def test_ewma_single_window_exchange(spark, sf_dir):
     """One shuffle (the user_id window partition), no Python: the fold
     over the frame list is a JVM higher-order aggregate."""
-    from serverless_etl_aws_spark.queries.extras11 import ts_ewma
+    from serverless_etl_aws_spark.queries.ts import ts_ewma
 
     plan = plan_of(ts_ewma(spark, sf_dir))
     assert plan.count("Exchange") <= 2  # window hash partitioning (+AQE read)
@@ -474,7 +478,7 @@ def test_ewma_single_window_exchange(spark, sf_dir):
 def test_random_projection_has_no_exchange(spark, sf_dir):
     """JL projection is a pure map pass: no shuffle, no Python — four
     sequential JVM folds over the vector column."""
-    from serverless_etl_aws_spark.queries.extras12 import ml_random_projection
+    from serverless_etl_aws_spark.queries.ml import ml_random_projection
 
     plan = plan_of(ml_random_projection(spark, sf_dir))
     assert "Exchange" not in plan
@@ -485,7 +489,7 @@ def test_atomic_table_read_is_partitioned_parquet_scan(spark, sf_dir):
     """Reading a snapshot table is one multi-path parquet scan with
     partition discovery — the same plan family as any partitioned table,
     not a union of per-partition scans."""
-    from serverless_etl_aws_spark.queries.extras12 import scan_atomic_table
+    from serverless_etl_aws_spark.queries.relational import scan_atomic_table
 
     plan = plan_of(scan_atomic_table(spark, sf_dir))
     assert "Union" not in plan
@@ -497,7 +501,7 @@ def test_lateral_join_decorrelates_to_group_limit(spark, sf_dir):
     per-group top-k (WindowGroupLimit) + hash join — executing the
     subquery once per outer row (nested loop / cartesian) would be
     O(outer × inner) and is the plan the key exists to rule out."""
-    from serverless_etl_aws_spark.queries.extras13 import join_lateral
+    from serverless_etl_aws_spark.queries.joins import join_lateral
 
     plan = plan_of(join_lateral(spark, sf_dir))
     assert "WindowGroupLimit" in plan
@@ -510,7 +514,7 @@ def test_lateral_join_decorrelates_to_group_limit(spark, sf_dir):
 def test_gap_detect_single_exchange(spark, sf_dir):
     """Gap detection is ONE window pass: exactly one shuffle (the
     user_id window partition), gap arithmetic stays in the projection."""
-    from serverless_etl_aws_spark.queries.extras13 import ts_gap_detect
+    from serverless_etl_aws_spark.queries.ts import ts_gap_detect
 
     plan = plan_of(ts_gap_detect(spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 1
@@ -520,7 +524,7 @@ def test_ngram_novelty_shares_one_shingle_explode(spark, sf_dir):
     """The shingle relation feeds both the df-count build side and the
     score join probe side from ONE materialization (localCheckpoint) —
     without it the corpus-wide split+explode executes twice."""
-    from serverless_etl_aws_spark.queries.extras13 import llm_ngram_novelty
+    from serverless_etl_aws_spark.queries.llm import llm_ngram_novelty
 
     plan = plan_of(llm_ngram_novelty(spark, sf_dir))
     # after the checkpoint, the executed plan scans the checkpointed RDD,
@@ -533,7 +537,7 @@ def test_prefix_dedup_hot_blocks_broadcast(spark, sf_dir):
     """The cold-block frequency stop joins as a BROADCAST (the block
     list is cap-bounded small), and the pair join is an equi-join on the
     block key — no nested loop anywhere in the plan."""
-    from serverless_etl_aws_spark.queries.extras13 import llm_prefix_dedup
+    from serverless_etl_aws_spark.queries.llm import llm_prefix_dedup
 
     plan = plan_of(llm_prefix_dedup(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
@@ -545,7 +549,7 @@ def test_agg_corr_single_aggregate_pass(spark, sf_dir):
     """All five decimal moments come out of ONE partial+final aggregate
     over one scan — a formulation that re-scanned per moment would show
     multiple FileScans."""
-    from serverless_etl_aws_spark.queries.extras13 import agg_corr
+    from serverless_etl_aws_spark.queries.aggregates import agg_corr
 
     plan = plan_of(agg_corr(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -555,7 +559,7 @@ def test_agg_corr_single_aggregate_pass(spark, sf_dir):
 def test_scene_cut_is_single_map_pass(spark, sf_dir):
     """Scene detection is payload-local: one scan, one mapInPandas, zero
     shuffles (frame pairs never leave their payload's partition)."""
-    from serverless_etl_aws_spark.queries.extras13 import mm_scene_cut
+    from serverless_etl_aws_spark.queries.llm import mm_scene_cut
 
     plan = plan_of(mm_scene_cut(spark, sf_dir))
     assert "Exchange" not in plan
@@ -610,7 +614,7 @@ def test_sample_weighted_is_shuffle_free_filter(spark, sf_dir):
     and threshold evaluate inside the scan stage — the plan must contain
     NO Exchange at all (the property that lets it compose with any
     downstream pipeline for free at 100 TB)."""
-    from serverless_etl_aws_spark.queries.extras14 import sample_weighted
+    from serverless_etl_aws_spark.queries.relational import sample_weighted
 
     plan = plan_of(sample_weighted(spark, sf_dir))
     assert "Exchange" not in plan
@@ -622,7 +626,7 @@ def test_agg_mode_windows_over_counts_not_events(spark, sf_dir):
     raw events: one count shuffle + one day-window shuffle, one scan —
     a formulation that windowed the fact table itself would sort events
     per day for no reason."""
-    from serverless_etl_aws_spark.queries.extras14 import agg_mode
+    from serverless_etl_aws_spark.queries.aggregates import agg_mode
 
     plan = plan_of(agg_mode(spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 2
@@ -633,7 +637,7 @@ def test_rolling_median_single_window_pass(spark, sf_dir):
     """The rolling median is ONE window pass (one shuffle on the
     partition key); the frame sort/pick is per-row projection work, not
     an extra exchange or join."""
-    from serverless_etl_aws_spark.queries.extras14 import win_rolling_median
+    from serverless_etl_aws_spark.queries.windows import win_rolling_median
 
     plan = plan_of(win_rolling_median(spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 1
@@ -647,7 +651,7 @@ def test_ts_seasonal_single_fact_pass_broadcast_rejoin(spark, sf_dir):
     so reduction order is immaterial), and the rejoin broadcasts the
     #types-sized frame — the executed plan scans the checkpoint RDD, no
     second parquet scan, no sort-merge join."""
-    from serverless_etl_aws_spark.queries.extras14 import ts_seasonal
+    from serverless_etl_aws_spark.queries.ts import ts_seasonal
 
     plan = plan_of(ts_seasonal(spark, sf_dir))
     assert "Scan ExistingRDD" in plan
@@ -662,7 +666,7 @@ def test_ts_cusum_one_shuffle_two_stacked_windows(spark, sf_dir):
     ordering — the executed plan must contain exactly one Exchange and
     no join (the drawdown identity keeps the detector embarrassingly
     partition-parallel)."""
-    from serverless_etl_aws_spark.queries.extras15 import ts_cusum
+    from serverless_etl_aws_spark.queries.ts import ts_cusum
 
     plan = plan_of(ts_cusum(spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 1
@@ -674,7 +678,7 @@ def test_ts_autocorr_agg_reuses_window_partitioning(spark, sf_dir):
     """The moment aggregate groups by the lag window's own partition key
     (event_type), so Catalyst plans NO second exchange: one shuffle
     total for lag + exact-moment corr."""
-    from serverless_etl_aws_spark.queries.extras15 import ts_autocorr
+    from serverless_etl_aws_spark.queries.ts import ts_autocorr
 
     plan = plan_of(ts_autocorr(spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 1
@@ -687,7 +691,7 @@ def test_naive_bayes_single_corpus_pass_no_smj(spark, sf_dir):
     reads ExistingRDD only, zero parquet re-scans), and every model
     aggregate runs over the (lang, term) count relation; the 1-row
     totals ride in as broadcasts — no sort-merge join, no cartesian."""
-    from serverless_etl_aws_spark.queries.extras15 import ml_naive_bayes
+    from serverless_etl_aws_spark.queries.ml import ml_naive_bayes
 
     plan = plan_of(ml_naive_bayes(spark, sf_dir))
     assert plan.count("FileScan parquet") == 0
@@ -702,7 +706,7 @@ def test_collocations_single_tokenize_no_smj(spark, sf_dir):
     (zero parquet scans in the executed plan), and the bigram groupBy
     keys on the flat 'a b' gram string split only AFTER the support
     filter."""
-    from serverless_etl_aws_spark.queries.extras15 import llm_collocations
+    from serverless_etl_aws_spark.queries.llm import llm_collocations
 
     plan = plan_of(llm_collocations(spark, sf_dir))
     assert plan.count("FileScan parquet") == 0
@@ -715,7 +719,7 @@ def test_drawdown_one_shuffle_three_windows(spark, sf_dir):
     """Running max, drawdown projection, and the argmax row_number are
     window passes over the SAME user_id partitioning: one Exchange, no
     join — the second ordering adds an in-partition sort only."""
-    from serverless_etl_aws_spark.queries.extras16 import win_drawdown
+    from serverless_etl_aws_spark.queries.windows import win_drawdown
 
     plan = plan_of(win_drawdown(spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 1
@@ -727,7 +731,7 @@ def test_skew_kurt_single_partial_agg_shuffle(spark, sf_dir):
     """The four decimal power sums are one map-side-combinable groupBy:
     exactly one Exchange, one scan, no join — the moment combination is
     projection work on the 5-row aggregate."""
-    from serverless_etl_aws_spark.queries.extras16 import agg_skew_kurt
+    from serverless_etl_aws_spark.queries.aggregates import agg_skew_kurt
 
     plan = plan_of(agg_skew_kurt(spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 1
@@ -739,7 +743,7 @@ def test_pareto_one_shuffle_exact_decimal_crossing(spark, sf_dir):
     """Rank, running sum, and the partition totals share one event_type
     shuffle, and the 80% crossing predicate is a decimal-times-integer
     comparison evaluated in-partition — one Exchange, no join."""
-    from serverless_etl_aws_spark.queries.extras16 import win_pareto
+    from serverless_etl_aws_spark.queries.windows import win_pareto
 
     plan = plan_of(win_pareto(spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 1
@@ -753,7 +757,7 @@ def test_degree_dist_equi_join_no_cartesian(spark, sf_dir):
     checkpoint (zero fact scans here — the one-time build is an
     equi-join on orderkey, asserted below), and the histogram aggregates
     run over node-sized relations."""
-    from serverless_etl_aws_spark.queries.extras16 import graph_degree_dist
+    from serverless_etl_aws_spark.queries.graph import graph_degree_dist
 
     plan = plan_of(graph_degree_dist(spark, sf_dir))
     assert "CartesianProduct" not in plan
@@ -778,7 +782,7 @@ def test_benford_no_join_single_count_shuffle(spark, sf_dir):
     aggregation branch would duplicate the scan subtree), and the
     expectation as a CASE projection of compile-time literals — no join
     of any kind."""
-    from serverless_etl_aws_spark.queries.extras17 import dq_benford
+    from serverless_etl_aws_spark.queries.dq import dq_benford
 
     plan = plan_of(dq_benford(spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 1
@@ -790,7 +794,7 @@ def test_hhi_two_tier_aggregate(spark, sf_dir):
     """HHI re-aggregates the (day, type) count relation — two
     map-side-combinable shuffles, one scan, no join (the same two-tier
     shape as agg_gini/agg_mode)."""
-    from serverless_etl_aws_spark.queries.extras17 import agg_hhi
+    from serverless_etl_aws_spark.queries.aggregates import agg_hhi
 
     plan = plan_of(agg_hhi(spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 2
@@ -803,7 +807,7 @@ def test_retention_windows_ride_collapsing_relations(spark, sf_dir):
     moves a collapsing relation (user-days, then cohort cells). The
     cohort-size share is a window over the cells — a join back to an
     offset-0 aggregate would add a duplicate aggregation branch."""
-    from serverless_etl_aws_spark.queries.extras18 import win_retention
+    from serverless_etl_aws_spark.queries.windows import win_retention
 
     plan = plan_of(win_retention(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -817,7 +821,7 @@ def test_auc_prefix_sum_over_buckets_not_corpus(spark, sf_dir):
     window and the final 1-row aggregate run on the bucket relation
     (single-partition exchange moves buckets, not rows). No join, no
     global sort of the corpus."""
-    from serverless_etl_aws_spark.queries.extras18 import ml_auc
+    from serverless_etl_aws_spark.queries.ml import ml_auc
 
     plan = plan_of(ml_auc(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -837,7 +841,7 @@ def test_profile_split_passes_keep_codegen(spark, sf_dir):
     (b) the Expand and its dedup HashAggregate sit inside a
     WholeStageCodegen span — the regression the split exists to
     prevent cannot silently return."""
-    from serverless_etl_aws_spark.queries.extras18 import dq_profile
+    from serverless_etl_aws_spark.queries.dq import dq_profile
 
     df = dq_profile(spark, sf_dir)
     plan = plan_of(df)
@@ -877,7 +881,7 @@ def test_jaccard_checkpointed_edges_broadcast_degrees(spark, sf_dir):
     duplicates the subtree into four full fact scans. Degrees are
     node-sized and broadcast; the pair join is the per-part
     posting-list equi-join, never a cartesian."""
-    from serverless_etl_aws_spark.queries.extras18 import graph_jaccard
+    from serverless_etl_aws_spark.queries.graph import graph_jaccard
 
     plan = plan_of(graph_jaccard(spark, sf_dir))
     assert plan.count("FileScan parquet") == 0  # all reads hit the checkpoint
@@ -893,7 +897,7 @@ def test_eval_keys_single_scan_single_shuffle(spark, sf_dir):
     map-side combinable); thresholds, base rates and row/col totals are
     windows over the bucket-sized relation, never a join or a second
     aggregation branch."""
-    from serverless_etl_aws_spark.queries.extras19 import (
+    from serverless_etl_aws_spark.queries.ml import (
         ml_calibration,
         ml_chi2,
         ml_confusion,
@@ -913,7 +917,7 @@ def test_trend_mk_pair_join_on_materialized_daily_relation(spark, sf_dir):
     duplicate-subtree class the ml_naive_bayes checkpoint fixed). The
     pair join is an equi-join on event_type over the day-sized
     relation."""
-    from serverless_etl_aws_spark.queries.extras19 import ts_trend_mk
+    from serverless_etl_aws_spark.queries.ts import ts_trend_mk
 
     plan = plan_of(ts_trend_mk(spark, sf_dir))
     assert plan.count("FileScan parquet") == 0  # daily is checkpointed
@@ -928,7 +932,7 @@ def test_referential_audit_broadcasts_parent_keys(spark, sf_dir):
     keys as a BROADCAST — the parent side is dimension-sized; nothing
     row-sized crosses a second shuffle and no edge degenerates into a
     nested-loop."""
-    from serverless_etl_aws_spark.queries.extras19 import dq_referential
+    from serverless_etl_aws_spark.queries.dq import dq_referential
 
     plan = plan_of(dq_referential(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") == 4  # one per FK edge
@@ -942,10 +946,8 @@ def test_stump_and_ks_single_scan_topk(spark, sf_dir):
     bucket shuffle, windows + impurity/gap arithmetic on the bucket
     relation, and the argmin/argmax is TakeOrderedAndProject (top-1),
     never a global sort of data. No join anywhere."""
-    from serverless_etl_aws_spark.queries.extras20 import (
-        agg_ks_test,
-        ml_stump,
-    )
+    from serverless_etl_aws_spark.queries.aggregates import agg_ks_test
+    from serverless_etl_aws_spark.queries.ml import ml_stump
 
     for fn in (ml_stump, agg_ks_test):
         plan = plan_of(fn(spark, sf_dir))
@@ -960,7 +962,7 @@ def test_vocab_growth_two_shuffles_no_join(spark, sf_dir):
     map-side-combinable gram→MIN(doc_id) groupBy); the checkpoint
     histogram is the only other exchange, over the vocabulary-sized
     first-occurrence relation. No join, one corpus scan."""
-    from serverless_etl_aws_spark.queries.extras20 import llm_vocab_growth
+    from serverless_etl_aws_spark.queries.llm import llm_vocab_growth
 
     plan = plan_of(llm_vocab_growth(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -975,7 +977,7 @@ def test_kcore_rounds_read_checkpoints_only(spark, sf_dir):
     zero fact scans at the consumer (the shared adjacency build is the
     family's one-time cost) and zero exchanges (the degree hash
     exchange ran inside the checkpoint job; r15 fixpoint early-exit)."""
-    from serverless_etl_aws_spark.queries.extras20 import graph_kcore
+    from serverless_etl_aws_spark.queries.graph import graph_kcore
 
     plan = plan_of(graph_kcore(spark, sf_dir))
     assert plan.count("FileScan parquet") == 0
@@ -989,10 +991,8 @@ def test_km_and_lag_collapse_before_windows(spark, sf_dir):
     map-side-combinable per-user shuffle each; every window, fold and
     final aggregate runs on the collapsed user/duration relation —
     nothing row-sized crosses a second exchange, no join."""
-    from serverless_etl_aws_spark.queries.extras21 import (
-        agg_conversion_lag,
-        ml_survival_km,
-    )
+    from serverless_etl_aws_spark.queries.aggregates import agg_conversion_lag
+    from serverless_etl_aws_spark.queries.ml import ml_survival_km
 
     for fn in (ml_survival_km, agg_conversion_lag):
         plan = plan_of(fn(spark, sf_dir))
@@ -1008,9 +1008,7 @@ def test_winsorized_mean_one_rank_sort(spark, sf_dir):
     sort (exact order-statistic bounds — the documented audit path);
     one corpus scan, one hash exchange (the event_type partition both
     the window and the final groupBy reuse), no join."""
-    from serverless_etl_aws_spark.queries.extras21 import (
-        agg_winsorized_mean,
-    )
+    from serverless_etl_aws_spark.queries.aggregates import agg_winsorized_mean
 
     plan = plan_of(agg_winsorized_mean(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1024,7 +1022,7 @@ def test_assortativity_checkpointed_adjacency_broadcast_degrees(spark, sf_dir):
     re-scans), degrees are node-sized and broadcast into the edge
     relation, and the moment reduction is a single aggregate — no
     sort-merge shuffle of the edge list, no cartesian."""
-    from serverless_etl_aws_spark.queries.extras22 import graph_assortativity
+    from serverless_etl_aws_spark.queries.graph import graph_assortativity
 
     plan = plan_of(graph_assortativity(spark, sf_dir))
     assert plan.count("FileScan parquet") == 0
@@ -1039,7 +1037,7 @@ def test_spc_windows_over_daily_counts_not_events(spark, sf_dir):
     one map-side-combinable shuffle; the moment windows and 3-sigma
     limits run on that days-sized relation (second, bounded exchange).
     No join — limits are windows, not a stats-relation rejoin."""
-    from serverless_etl_aws_spark.queries.extras22 import dq_spc
+    from serverless_etl_aws_spark.queries.dq import dq_spc
 
     plan = plan_of(dq_spc(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1052,7 +1050,7 @@ def test_ndcg_single_user_shuffle(spark, sf_dir):
     groupBy reuses the window's partitioning) and the discount weights
     are compile-time literals — no join, no second shuffle, nothing
     broadcast."""
-    from serverless_etl_aws_spark.queries.extras22 import ml_ndcg
+    from serverless_etl_aws_spark.queries.ml import ml_ndcg
 
     plan = plan_of(ml_ndcg(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1064,7 +1062,7 @@ def test_phash_one_arrow_pass_one_signature_shuffle(spark, sf_dir):
     """mm_phash computes signatures in a single Arrow mapInPandas pass
     over one corpus scan; the collision count is one window exchange on
     the 64-bit hash. No join, no second Python stage."""
-    from serverless_etl_aws_spark.queries.extras22 import mm_phash
+    from serverless_etl_aws_spark.queries.llm import mm_phash
 
     plan = plan_of(mm_phash(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1080,9 +1078,7 @@ def test_clustering_coeff_array_intersect_no_wedge_shuffle(spark, sf_dir):
     checkpoints (shared adjacency + the materialized oriented edges);
     the node-sized out-lists and final triangle counts broadcast; no
     sort-merge join, no cartesian."""
-    from serverless_etl_aws_spark.queries.extras23 import (
-        graph_clustering_coeff,
-    )
+    from serverless_etl_aws_spark.queries.graph import graph_clustering_coeff
 
     plan = plan_of(graph_clustering_coeff(spark, sf_dir))
     assert plan.count("FileScan parquet") == 0
@@ -1095,7 +1091,7 @@ def test_lift_windows_over_buckets_not_events(spark, sf_dir):
     """ml_lift collapses the corpus to integer score buckets in ONE
     map-side-combinable shuffle; the cumulative/total windows run on
     the bucket relation. No join."""
-    from serverless_etl_aws_spark.queries.extras23 import ml_lift
+    from serverless_etl_aws_spark.queries.ml import ml_lift
 
     plan = plan_of(ml_lift(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1108,7 +1104,7 @@ def test_holt_single_user_shuffle_no_python(spark, sf_dir):
     collect_list window and the rn filter share the partitioning);
     the recursion is a JVM-side array fold — no Python stage, no
     join."""
-    from serverless_etl_aws_spark.queries.extras23 import ts_holt
+    from serverless_etl_aws_spark.queries.ts import ts_holt
 
     plan = plan_of(ts_holt(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1122,7 +1118,7 @@ def test_freshness_scalar_attach_broadcast(spark, sf_dir):
     scalar-attach 1xN pattern) and aggregates per type in one
     map-side-combinable shuffle — the nested-loop join must be the
     1-row broadcast, never a shuffled join."""
-    from serverless_etl_aws_spark.queries.extras23 import dq_freshness
+    from serverless_etl_aws_spark.queries.dq import dq_freshness
 
     plan = plan_of(dq_freshness(spark, sf_dir))
     assert plan.count("BroadcastNestedLoopJoin") == 1
@@ -1135,7 +1131,7 @@ def test_pr_at_k_single_user_shuffle(spark, sf_dir):
     the groupBy reuses the row_number window's partitioning exactly
     like ml_ndcg (the pair must stay plan-identical in shape): no
     join, no second shuffle."""
-    from serverless_etl_aws_spark.queries.extras24 import ml_pr_at_k
+    from serverless_etl_aws_spark.queries.ml import ml_pr_at_k
 
     plan = plan_of(ml_pr_at_k(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1150,7 +1146,7 @@ def test_modularity_checkpointed_adjacency_broadcast_brands(spark, sf_dir):
     never shuffling the edge relation through a sort-merge join. The
     2m total is a window over the 25-community aggregate (the one
     SinglePartition exchange), not a second corpus pass."""
-    from serverless_etl_aws_spark.queries.extras24 import graph_modularity
+    from serverless_etl_aws_spark.queries.graph import graph_modularity
 
     plan = plan_of(graph_modularity(spark, sf_dir))
     scans = plan.count("FileScan parquet")
@@ -1168,7 +1164,7 @@ def test_ab_test_two_bounded_shuffles_no_join(spark, sf_dir):
     map-side-combinable shuffle, then to 2 arm rows in a second; the
     z statistic is computed on a single 1-row aggregate — no join
     anywhere, nothing corpus-sized past the first exchange."""
-    from serverless_etl_aws_spark.queries.extras24 import ml_ab_test
+    from serverless_etl_aws_spark.queries.ml import ml_ab_test
 
     plan = plan_of(ml_ab_test(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1182,7 +1178,7 @@ def test_simpson_broadcast_dims_two_bounded_shuffles(spark, sf_dir):
     map-side-combinable shuffle; the diversity index is a second
     aggregate over that <= nations*types relation. No sort-merge
     join, no third exchange."""
-    from serverless_etl_aws_spark.queries.extras24 import agg_simpson
+    from serverless_etl_aws_spark.queries.aggregates import agg_simpson
 
     plan = plan_of(agg_simpson(spark, sf_dir))
     assert plan.count("FileScan parquet") == 4
@@ -1196,7 +1192,7 @@ def test_changepoint_single_user_shuffle_no_join(spark, sf_dir):
     user_id exchange (stacked sorts, no re-shuffle between the CUSUM
     computation and the argmax), and no join or Python stage appears —
     the argmax is exact-integer window arithmetic."""
-    from serverless_etl_aws_spark.queries.extras25 import ts_changepoint
+    from serverless_etl_aws_spark.queries.ts import ts_changepoint
 
     plan = plan_of(ts_changepoint(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1212,7 +1208,7 @@ def test_spearman_collapse_then_one_nation_exchange(spark, sf_dir):
     spend/nation attach joins stay broadcast at test scale (AQE may
     legitimately pick a shuffled join at cluster scale — only the
     exchange and scan budget is pinned)."""
-    from serverless_etl_aws_spark.queries.extras25 import ml_spearman
+    from serverless_etl_aws_spark.queries.ml import ml_spearman
 
     plan = plan_of(ml_spearman(spark, sf_dir))
     assert plan.count("FileScan parquet") == 3
@@ -1226,9 +1222,7 @@ def test_resource_alloc_checkpointed_edges_no_rescan(spark, sf_dir):
     parquet scans — with the part-degree weights attached by broadcast
     before the pair join and the top-K window bounding the sink. No
     cartesian, no sort-merge join at test scale."""
-    from serverless_etl_aws_spark.queries.extras25 import (
-        graph_resource_alloc,
-    )
+    from serverless_etl_aws_spark.queries.graph import graph_resource_alloc
 
     plan = plan_of(graph_resource_alloc(spark, sf_dir))
     assert plan.count("FileScan parquet") == 0
@@ -1242,9 +1236,7 @@ def test_best_threshold_bucket_windows_no_join(spark, sf_dir):
     collapse off the corpus, then the sweep + exact-integer argmax run
     on the bucket relation inside one SinglePartition window — no
     join, nothing corpus-sized past the first exchange."""
-    from serverless_etl_aws_spark.queries.extras25 import (
-        ml_best_threshold,
-    )
+    from serverless_etl_aws_spark.queries.ml import ml_best_threshold
 
     plan = plan_of(ml_best_threshold(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1259,7 +1251,7 @@ def test_theil_sen_days_relation_checkpointed_once(spark, sf_dir):
     duplicated scan+agg subtree per self-join side (the ml_naive_bayes
     lineage-truncation pattern; without it the plan carried 2x
     FileScan). The rank window shares the type partitioning."""
-    from serverless_etl_aws_spark.queries.extras26 import ts_theil_sen
+    from serverless_etl_aws_spark.queries.ts import ts_theil_sen
 
     plan = plan_of(ts_theil_sen(spark, sf_dir))
     assert plan.count("FileScan parquet") <= 1
@@ -1273,7 +1265,7 @@ def test_assoc_rules_shared_edges_distributed_topk(spark, sf_dir):
     scalar-attach, and bounds the sink with a DISTRIBUTED
     TakeOrderedAndProject — never a single-partition sort of the rule
     space."""
-    from serverless_etl_aws_spark.queries.extras26 import ml_assoc_rules
+    from serverless_etl_aws_spark.queries.ml import ml_assoc_rules
 
     plan = plan_of(ml_assoc_rules(spark, sf_dir))
     assert plan.count("FileScan parquet") == 0
@@ -1287,7 +1279,7 @@ def test_wilson_ci_one_shuffle_no_join(spark, sf_dir):
     """ml_wilson_ci is one map-side-combinable collapse to
     (type, n, s); the interval algebra runs on the types-sized
     relation — no join, no second exchange."""
-    from serverless_etl_aws_spark.queries.extras26 import ml_wilson_ci
+    from serverless_etl_aws_spark.queries.ml import ml_wilson_ci
 
     plan = plan_of(ml_wilson_ci(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1300,7 +1292,7 @@ def test_uniqueness_one_key_shuffle_per_table_no_join(spark, sf_dir):
     count-shuffle on that table's own key (7 specs -> 7 scans, 7 hash
     exchanges), unioned — no join anywhere, so a 100 TB fact costs one
     shuffle, not a comparison against anything."""
-    from serverless_etl_aws_spark.queries.extras26 import dq_uniqueness
+    from serverless_etl_aws_spark.queries.dq import dq_uniqueness
 
     plan = plan_of(dq_uniqueness(spark, sf_dir))
     assert plan.count("FileScan parquet") == 7
@@ -1314,7 +1306,7 @@ def test_iqr_outliers_quartiles_ride_rank_window(spark, sf_dir):
     inside the ONE event_type exchange (rank window + max-of-case +
     aggregate share the partitioning) — no self-join, no second scan,
     no float in the fences (doubled-integer comparisons)."""
-    from serverless_etl_aws_spark.queries.extras27 import dq_iqr_outliers
+    from serverless_etl_aws_spark.queries.dq import dq_iqr_outliers
 
     plan = plan_of(dq_iqr_outliers(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1326,7 +1318,7 @@ def test_calendar_generated_zero_io(spark, sf_dir):
     """dim_calendar is generated (sequence + explode): ZERO parquet
     scans, zero exchanges, no join — the dimension is minted, not
     derived."""
-    from serverless_etl_aws_spark.queries.extras27 import dim_calendar
+    from serverless_etl_aws_spark.queries.pipeline_ops import dim_calendar
 
     plan = plan_of(dim_calendar(spark, sf_dir))
     assert plan.count("FileScan parquet") == 0
@@ -1339,7 +1331,7 @@ def test_feature_hash_pure_jvm_one_shuffle(spark, sf_dir):
     """ml_feature_hash must stay entirely JVM-side (md5/substring/conv
     inside codegen — NO Python stage) with one explode and one
     map-side-combinable (doc, dim) shuffle."""
-    from serverless_etl_aws_spark.queries.extras27 import ml_feature_hash
+    from serverless_etl_aws_spark.queries.ml import ml_feature_hash
 
     plan = plan_of(ml_feature_hash(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1354,7 +1346,7 @@ def test_ltv_cohort_single_scan_no_size_rejoin(spark, sf_dir):
     (cohort, age) aggregate as revenue (age-0 distinct count spread by
     a window) instead of a separate sizes relation rejoined — the
     duplicate-subtree trap the single-scan restructure removed."""
-    from serverless_etl_aws_spark.queries.extras27 import ml_ltv_cohort
+    from serverless_etl_aws_spark.queries.ml import ml_ltv_cohort
 
     plan = plan_of(ml_ltv_cohort(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1366,7 +1358,7 @@ def test_mrr_single_user_shuffle_one_row_out(spark, sf_dir):
     per-user collapse) and reduces to a single row via one
     SinglePartition aggregate — no join, nothing corpus-sized past the
     first exchange."""
-    from serverless_etl_aws_spark.queries.extras28 import ml_mrr
+    from serverless_etl_aws_spark.queries.ml import ml_mrr
 
     plan = plan_of(ml_mrr(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1379,7 +1371,7 @@ def test_tvd_one_collapse_windows_on_tiny_relation(spark, sf_dir):
     map-side-combinable shuffle; the split-point min/max, half totals
     and TVD total are all windows over that tiny relation — no join,
     no second corpus pass for the midpoint."""
-    from serverless_etl_aws_spark.queries.extras28 import dq_tvd_drift
+    from serverless_etl_aws_spark.queries.dq import dq_tvd_drift
 
     plan = plan_of(dq_tvd_drift(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1391,7 +1383,7 @@ def test_forecast_eval_lags_on_days_relation(spark, sf_dir):
     """ml_forecast_eval's lag windows and the per-type score aggregate
     run on the (type, day) relation, never the corpus: one corpus
     collapse, one type re-exchange, no join."""
-    from serverless_etl_aws_spark.queries.extras28 import ml_forecast_eval
+    from serverless_etl_aws_spark.queries.ml import ml_forecast_eval
 
     plan = plan_of(ml_forecast_eval(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1405,9 +1397,7 @@ def test_reciprocity_broadcast_dims_two_bounded_shuffles(spark, sf_dir):
     rows) in one map-side-combinable shuffle; the unordered-pair
     regroup is the second, pair-sized exchange. No cartesian, no
     sort-merge join at test scale."""
-    from serverless_etl_aws_spark.queries.extras28 import (
-        graph_reciprocity,
-    )
+    from serverless_etl_aws_spark.queries.graph import graph_reciprocity
 
     plan = plan_of(graph_reciprocity(spark, sf_dir))
     assert plan.count("FileScan parquet") == 6
@@ -1421,7 +1411,7 @@ def test_cramers_v_grid_windows_one_fact_shuffle(spark, sf_dir):
     and collapses to the <=5x5 contingency grid in ONE
     map-side-combinable shuffle; totals, category counts and the
     effect size all run on grid-sized relations."""
-    from serverless_etl_aws_spark.queries.extras29 import agg_cramers_v
+    from serverless_etl_aws_spark.queries.aggregates import agg_cramers_v
 
     plan = plan_of(agg_cramers_v(spark, sf_dir))
     assert plan.count("FileScan parquet") == 2
@@ -1435,7 +1425,7 @@ def test_kendall_tau_pairs_on_checkpointed_days(spark, sf_dir):
     checkpointed days relation (one corpus pass, zero duplicate scan
     subtrees); the non-equi day join is a broadcast nested loop over
     the calendar-bounded relation, never a cartesian of the corpus."""
-    from serverless_etl_aws_spark.queries.extras29 import ml_kendall_tau
+    from serverless_etl_aws_spark.queries.ml import ml_kendall_tau
 
     plan = plan_of(ml_kendall_tau(spark, sf_dir))
     assert plan.count("FileScan parquet") <= 1
@@ -1447,9 +1437,7 @@ def test_uplift_segments_collapse_then_pivot(spark, sf_dir):
     """ml_uplift_segments collapses to per-user flags in one
     map-side-combinable shuffle, then to 2x5 (arm, segment) cells,
     then the per-segment pivot — three bounded exchanges, no join."""
-    from serverless_etl_aws_spark.queries.extras29 import (
-        ml_uplift_segments,
-    )
+    from serverless_etl_aws_spark.queries.ml import ml_uplift_segments
 
     plan = plan_of(ml_uplift_segments(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1461,7 +1449,7 @@ def test_out_of_order_running_max_one_user_shuffle(spark, sf_dir):
     """dq_out_of_order is one user_id window shuffle (running integer
     max, O(1) state per row) plus one per-type collapse — no join, no
     self-comparison of the corpus."""
-    from serverless_etl_aws_spark.queries.extras29 import dq_out_of_order
+    from serverless_etl_aws_spark.queries.dq import dq_out_of_order
 
     plan = plan_of(dq_out_of_order(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1474,7 +1462,7 @@ def test_lorenz_global_rank_then_ten_rows(spark, sf_dir):
     map-side-combinable shuffle; the global rank runs in one ordered
     exchange (range-partitioned sort at cluster scale) and everything
     after is a 10-row relation. No join."""
-    from serverless_etl_aws_spark.queries.extras30 import agg_lorenz
+    from serverless_etl_aws_spark.queries.aggregates import agg_lorenz
 
     plan = plan_of(agg_lorenz(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1485,9 +1473,7 @@ def test_embedding_audit_jvm_array_fold_one_shuffle(spark, sf_dir):
     """dq_embedding_audit folds norms inside JVM higher-order array
     functions (NO Python stage) with one per-label shuffle — the whole
     audit is a single pass over the vectors."""
-    from serverless_etl_aws_spark.queries.extras30 import (
-        dq_embedding_audit,
-    )
+    from serverless_etl_aws_spark.queries.dq import dq_embedding_audit
 
     plan = plan_of(dq_embedding_audit(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1503,7 +1489,7 @@ def test_active_users_checkpointed_userday_no_rescan(spark, sf_dir):
     the explode-by-offset linear pass, never a range self-join of the
     corpus (no cartesian; the only nested-loop is the 1-row span
     attach)."""
-    from serverless_etl_aws_spark.queries.extras30 import ts_active_users
+    from serverless_etl_aws_spark.queries.ts import ts_active_users
 
     plan = plan_of(ts_active_users(spark, sf_dir))
     assert plan.count("FileScan parquet") == 0
@@ -1516,7 +1502,7 @@ def test_burstiness_two_bounded_shuffles(spark, sf_dir):
     """ts_burstiness is one corpus collapse to (type, day) counts and
     one per-type aggregate — two bounded exchanges, no join, no
     float until the two final divisions."""
-    from serverless_etl_aws_spark.queries.extras30 import ts_burstiness
+    from serverless_etl_aws_spark.queries.ts import ts_burstiness
 
     plan = plan_of(ts_burstiness(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1529,9 +1515,7 @@ def test_temporal_integrity_one_fact_join_one_collapse(spark, sf_dir):
     test scale; AQE-skew-split shuffle at cluster scale) and one
     map-side-combinable per-priority collapse — no cartesian, no
     second pass."""
-    from serverless_etl_aws_spark.queries.extras31 import (
-        dq_temporal_integrity,
-    )
+    from serverless_etl_aws_spark.queries.dq import dq_temporal_integrity
 
     plan = plan_of(dq_temporal_integrity(spark, sf_dir))
     assert plan.count("FileScan parquet") == 2
@@ -1544,9 +1528,7 @@ def test_weighted_median_one_brand_window_shuffle(spark, sf_dir):
     and runs BOTH the cumulative-weight window and the selection
     window inside ONE brand exchange — no re-shuffle between the
     cumsum and the pick."""
-    from serverless_etl_aws_spark.queries.extras31 import (
-        agg_weighted_median,
-    )
+    from serverless_etl_aws_spark.queries.aggregates import agg_weighted_median
 
     plan = plan_of(agg_weighted_median(spark, sf_dir))
     assert plan.count("FileScan parquet") == 2
@@ -1559,7 +1541,7 @@ def test_diff_in_diff_one_user_shuffle_one_row(spark, sf_dir):
     """ml_diff_in_diff collapses to per-user (conv, first_day) in one
     shuffle; the midpoint, cells and the 1-row pivot all run on
     user-or-smaller relations. No join."""
-    from serverless_etl_aws_spark.queries.extras31 import ml_diff_in_diff
+    from serverless_etl_aws_spark.queries.ml import ml_diff_in_diff
 
     plan = plan_of(ml_diff_in_diff(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1572,7 +1554,7 @@ def test_share_shift_broadcast_dims_grid_windows(spark, sf_dir):
     collapses to the <=25x2 (nation, half) grid in its first
     aggregate; the share windows run on the grid. No sort-merge join,
     no cartesian."""
-    from serverless_etl_aws_spark.queries.extras31 import agg_share_shift
+    from serverless_etl_aws_spark.queries.aggregates import agg_share_shift
 
     plan = plan_of(agg_share_shift(spark, sf_dir))
     assert plan.count("FileScan parquet") == 3
@@ -1585,7 +1567,7 @@ def test_markov_chain_window_then_grid(spark, sf_dir):
     """ml_markov_chain is one user_id window shuffle (lead is O(1)
     state), one collapse onto the <=5x5 transition grid, and a
     grid-sized normalizer window — no join."""
-    from serverless_etl_aws_spark.queries.extras32 import ml_markov_chain
+    from serverless_etl_aws_spark.queries.ml import ml_markov_chain
 
     plan = plan_of(ml_markov_chain(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1598,7 +1580,7 @@ def test_cross_corr_offset_equijoin_on_checkpointed_days(spark, sf_dir):
     shifted day key (explode by 15 offsets) over the lazily
     checkpointed days relation — never a theta/cartesian join, one
     corpus pass."""
-    from serverless_etl_aws_spark.queries.extras32 import ts_cross_corr
+    from serverless_etl_aws_spark.queries.ts import ts_cross_corr
 
     plan = plan_of(ts_cross_corr(spark, sf_dir))
     assert plan.count("FileScan parquet") <= 1
@@ -1609,7 +1591,7 @@ def test_cross_corr_offset_equijoin_on_checkpointed_days(spark, sf_dir):
 def test_ece_bins_then_one_row(spark, sf_dir):
     """ml_ece is one map-side-combinable collapse onto <=13 score bins
     and a 1-row reduce — no join, nothing corpus-sized downstream."""
-    from serverless_etl_aws_spark.queries.extras32 import ml_ece
+    from serverless_etl_aws_spark.queries.ml import ml_ece
 
     plan = plan_of(ml_ece(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1622,9 +1604,7 @@ def test_completeness_trend_pair_scan_on_days_only(spark, sf_dir):
     and the 1-row S attach on the checkpointed days relation — zero
     corpus re-scans, and the only nested-loop joins are the
     days-bounded pair scan and the 1-row scalar attach."""
-    from serverless_etl_aws_spark.queries.extras32 import (
-        dq_completeness_trend,
-    )
+    from serverless_etl_aws_spark.queries.dq import dq_completeness_trend
 
     plan = plan_of(dq_completeness_trend(spark, sf_dir))
     assert plan.count("FileScan parquet") == 0
@@ -1636,7 +1616,7 @@ def test_anova_weekday_seven_groups_one_shuffle(spark, sf_dir):
     """ts_anova_weekday collapses the corpus onto 7 weekday groups in
     one map-side-combinable shuffle; the F assembly is 7-row
     arithmetic. No join."""
-    from serverless_etl_aws_spark.queries.extras33 import ts_anova_weekday
+    from serverless_etl_aws_spark.queries.ts import ts_anova_weekday
 
     plan = plan_of(ts_anova_weekday(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1649,7 +1629,7 @@ def test_table_checksum_zero_shuffles(spark, sf_dir):
     folded map-side into a global aggregate — ZERO hash exchanges in
     the whole plan (the canonical embarrassingly-parallel audit), no
     join, pure JVM hashing."""
-    from serverless_etl_aws_spark.queries.extras33 import dq_table_checksum
+    from serverless_etl_aws_spark.queries.dq import dq_table_checksum
 
     plan = plan_of(dq_table_checksum(spark, sf_dir))
     assert plan.count("FileScan parquet") == 7
@@ -1663,7 +1643,7 @@ def test_feature_screen_stack_one_scan(spark, sf_dir):
     stack (ONE scan, one Generate) and collapses to 4 feature groups
     in one map-side-combinable shuffle — never four scans, never a
     Python stage."""
-    from serverless_etl_aws_spark.queries.extras33 import ml_feature_screen
+    from serverless_etl_aws_spark.queries.ml import ml_feature_screen
 
     plan = plan_of(ml_feature_screen(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1677,7 +1657,7 @@ def test_target_encode_broadcast_dim_grid_windows(spark, sf_dir):
     collapses to the brands-sized relation in one shuffle, and
     computes prior + encoding as windows over that grid — one
     corpus pass, no sort-merge join."""
-    from serverless_etl_aws_spark.queries.extras33 import ml_target_encode
+    from serverless_etl_aws_spark.queries.ml import ml_target_encode
 
     plan = plan_of(ml_target_encode(spark, sf_dir))
     assert plan.count("FileScan parquet") == 2
@@ -1692,7 +1672,7 @@ def test_json_schema_bounded_explode_one_collapse(spark, sf_dir):
     1-row scalar attach. The second scan reads ONLY the projected
     props column (columnar pushdown) — cheaper than materializing the
     strings for a single-pass checkpoint."""
-    from serverless_etl_aws_spark.queries.extras34 import dq_json_schema
+    from serverless_etl_aws_spark.queries.dq import dq_json_schema
 
     plan = plan_of(dq_json_schema(spark, sf_dir))
     assert plan.count("FileScan parquet") == 2
@@ -1706,9 +1686,7 @@ def test_mix_rate_decomp_zero_exchanges_after_broadcasts(spark, sf_dir):
     nation grid with ZERO hash exchanges at test scale (partial
     aggregation suffices on the broadcast-joined stream) — no
     sort-merge join, no cartesian."""
-    from serverless_etl_aws_spark.queries.extras34 import (
-        agg_mix_rate_decomp,
-    )
+    from serverless_etl_aws_spark.queries.aggregates import agg_mix_rate_decomp
 
     plan = plan_of(agg_mix_rate_decomp(spark, sf_dir))
     assert plan.count("FileScan parquet") == 3
@@ -1721,7 +1699,7 @@ def test_median_ci_shares_iqr_shape(spark, sf_dir):
     """agg_median_ci selects median and both CI endpoints inside ONE
     event_type exchange (the dq_iqr_outliers shape) — no join, no
     second scan."""
-    from serverless_etl_aws_spark.queries.extras34 import agg_median_ci
+    from serverless_etl_aws_spark.queries.aggregates import agg_median_ci
 
     plan = plan_of(agg_median_ci(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1734,9 +1712,7 @@ def test_label_centroids_checkpointed_pair_join(spark, sf_dir):
     ONCE (lazy checkpoint — the self-join would otherwise duplicate
     the explode+collapse subtree) and pair-joins it label<label; the
     nested loop runs over labels^2, never the vectors."""
-    from serverless_etl_aws_spark.queries.extras34 import (
-        ml_label_centroids,
-    )
+    from serverless_etl_aws_spark.queries.ml import ml_label_centroids
 
     plan = plan_of(ml_label_centroids(spark, sf_dir))
     assert plan.count("FileScan parquet") == 0
@@ -1749,7 +1725,7 @@ def test_churn_labels_scalar_cutoff_one_user_collapse(spark, sf_dir):
     scalar (NEVER a global window over raw corpus rows — that would
     funnel everything through one partition) and computes features AND
     label in ONE per-user collapse over the same scan."""
-    from serverless_etl_aws_spark.queries.extras35 import ml_churn_labels
+    from serverless_etl_aws_spark.queries.ml import ml_churn_labels
 
     plan = plan_of(ml_churn_labels(spark, sf_dir))
     assert plan.count("BroadcastNestedLoopJoin") == 1  # 1-row cut
@@ -1762,7 +1738,7 @@ def test_gap_fill_spine_generates_from_span(spark, sf_dir):
     the checkpointed observed relation (zero corpus re-scans) and
     left-joins observed counts onto it — all post-collapse relations
     are calendar-bounded."""
-    from serverless_etl_aws_spark.queries.extras35 import ts_gap_fill
+    from serverless_etl_aws_spark.queries.ts import ts_gap_fill
 
     plan = plan_of(ts_gap_fill(spark, sf_dir))
     assert plan.count("FileScan parquet") == 0
@@ -1775,7 +1751,7 @@ def test_abc_class_rank_then_three_rows(spark, sf_dir):
     """agg_abc_class collapses to per-part revenue in one shuffle,
     classifies inside one global ordered window (range-partitioned
     sort at cluster scale), then reduces to 3 class rows. No join."""
-    from serverless_etl_aws_spark.queries.extras35 import agg_abc_class
+    from serverless_etl_aws_spark.queries.aggregates import agg_abc_class
 
     plan = plan_of(agg_abc_class(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1786,7 +1762,7 @@ def test_saturation_shares_iqr_shape(spark, sf_dir):
     """dq_saturation extracts min/max and counts the pile-up inside
     ONE event_type exchange (the dq_iqr_outliers window-reuse shape) —
     no join, no second scan."""
-    from serverless_etl_aws_spark.queries.extras35 import dq_saturation
+    from serverless_etl_aws_spark.queries.dq import dq_saturation
 
     plan = plan_of(dq_saturation(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -1798,7 +1774,7 @@ def test_gini_two_tier_aggregate(spark, sf_dir):
     """agg_gini re-aggregates the (day, type) count relation — two
     map-side-combinable shuffles, one scan, no join (the two-tier
     shape agg_hhi's test pins; this pins it for "agg_gini" itself)."""
-    from serverless_etl_aws_spark.queries.extras13 import agg_gini
+    from serverless_etl_aws_spark.queries.aggregates import agg_gini
 
     plan = plan_of(agg_gini(spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 2
@@ -1815,7 +1791,7 @@ def test_salted_join_partitions_on_salt(spark, sf_dir):
     is disabled for the probe: at fixture scale the replicated small
     side broadcasts (correct, but then no exchange exists to inspect) —
     salting only matters on the shuffle path, so pin that path."""
-    from serverless_etl_aws_spark.queries.extras import join_salted
+    from serverless_etl_aws_spark.queries.joins import join_salted
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -1894,7 +1870,7 @@ def test_percentile_shares_scan_per_measure(spark, sf_dir):
     lineitem scan (one sort-window pass per measure, not per
     percentile): exactly 2 file scans (qty + discount), window-ranked,
     never a cartesian."""
-    from serverless_etl_aws_spark.queries.extras import agg_percentile
+    from serverless_etl_aws_spark.queries.aggregates import agg_percentile
 
     plan = plan_of(agg_percentile(spark, sf_dir))
     assert plan.count("FileScan parquet") == 2
@@ -1907,7 +1883,7 @@ def test_multi_distinct_compiles_to_expand_single_scan(spark, sf_dir):
     """agg_multi_distinct's three DISTINCT aggregates must resolve via
     Catalyst's Expand in ONE aggregation pipeline over ONE scan — the
     regression is N self-joined scans."""
-    from serverless_etl_aws_spark.queries.extras10 import agg_multi_distinct
+    from serverless_etl_aws_spark.queries.aggregates import agg_multi_distinct
 
     plan = plan_of(agg_multi_distinct(spark, sf_dir))
     assert "Expand" in plan
@@ -1996,7 +1972,7 @@ def test_dedup_apply_survivor_pick_uses_rank_limit(spark, sf_dir):
     argmax must ride the same WindowGroupLimit rank-limit pushdown as
     topk_per_group — each map task ships one candidate survivor per
     cluster, not the whole cluster."""
-    from serverless_etl_aws_spark.queries.extras13 import llm_dedup_apply
+    from serverless_etl_aws_spark.queries.llm import llm_dedup_apply
 
     plan = plan_of(llm_dedup_apply(spark, sf_dir))
     assert "CartesianProduct" not in plan
@@ -2013,7 +1989,7 @@ def test_dedup_apply_survivor_pick_uses_rank_limit(spark, sf_dir):
 def test_agg_stats_partial_agg_single_scan(spark, sf_dir):
     """agg_stats: one scan, map-side combine (two HashAggregate tiers
     around one exchange), no join."""
-    from serverless_etl_aws_spark.queries.extras5 import agg_stats
+    from serverless_etl_aws_spark.queries.aggregates import agg_stats
 
     plan = plan_of(agg_stats(spark, sf_dir))
     assert plan.count("HashAggregate") >= 2
@@ -2042,7 +2018,7 @@ def test_kmeans_assign_broadcasts_centroids(spark, sf_dir):
     cartesian. (BroadcastNestedLoopJoin is the INTENDED node here: the
     build side is k rows; the regression is a shuffle-based cartesian
     or a corpus-side exchange before the scoring join.)"""
-    from serverless_etl_aws_spark.queries.extras6 import ml_kmeans
+    from serverless_etl_aws_spark.queries.ml import ml_kmeans
 
     plan = plan_of(ml_kmeans(spark, sf_dir))
     assert "CartesianProduct" not in plan
@@ -2066,7 +2042,7 @@ def test_pagerank_iterations_stay_equi_join(spark, sf_dir):
     """graph_pagerank: every unrolled iteration joins rank to the edge
     list by node key (SMJ/BHJ) — a regression to a nested-loop spread
     is the plan that cannot run on a real graph."""
-    from serverless_etl_aws_spark.queries.extras6 import graph_pagerank
+    from serverless_etl_aws_spark.queries.graph import graph_pagerank
 
     plan = plan_of(graph_pagerank(spark, sf_dir))
     assert "CartesianProduct" not in plan
@@ -2088,9 +2064,7 @@ def test_cube_compiles_to_expand_single_scan(spark, sf_dir):
 def test_label_propagation_iterations_stay_equi_join(spark, sf_dir):
     """graph_label_propagation: the per-iteration label spread is an
     equi-join on node ids with aggregation — never a product."""
-    from serverless_etl_aws_spark.queries.extras10 import (
-        graph_label_propagation,
-    )
+    from serverless_etl_aws_spark.queries.graph import graph_label_propagation
 
     plan = plan_of(graph_label_propagation(spark, sf_dir))
     assert "CartesianProduct" not in plan
@@ -2101,7 +2075,7 @@ def test_bpe_pairs_topk_not_global_sort(spark, sf_dir):
     """llm_bpe_pairs: the most-frequent-pair pick is
     TakeOrderedAndProject (partial top-k per partition, k rows per map
     task), never a global Sort of the full pair histogram."""
-    from serverless_etl_aws_spark.queries.extras6 import llm_bpe_pairs
+    from serverless_etl_aws_spark.queries.llm import llm_bpe_pairs
 
     plan = plan_of(llm_bpe_pairs(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
@@ -2111,7 +2085,7 @@ def test_bpe_pairs_topk_not_global_sort(spark, sf_dir):
 def test_bigram_lm_no_true_cartesian(spark, sf_dir):
     """llm_bigram_lm: the only product-shaped node is the 1x1 broadcast
     of the scalar totals relation; the n-gram relations join equi."""
-    from serverless_etl_aws_spark.queries.extras3 import llm_bigram_lm
+    from serverless_etl_aws_spark.queries.llm import llm_bigram_lm
 
     plan = plan_of(llm_bigram_lm(spark, sf_dir))
     assert "CartesianProduct" not in plan
@@ -2123,7 +2097,7 @@ def test_bfs_final_plan_reads_checkpoint_only(spark, sf_dir):
     (its loop is pinned by the graph operator tests), the RETURNED
     relation is a read of checkpointed state — no join or product
     re-enters the final plan."""
-    from serverless_etl_aws_spark.queries.extras13 import graph_bfs
+    from serverless_etl_aws_spark.queries.graph import graph_bfs
 
     plan = plan_of(graph_bfs(spark, sf_dir))
     assert "CartesianProduct" not in plan
@@ -2181,7 +2155,7 @@ def test_graph_components_final_plan_reads_checkpoint(spark, sf_dir):
     loop (pinned by the operator tests), the returned relation is the
     checkpointed component state + ONE broadcast equi-join to attach
     names — never a product, never a sort-merge of the iteration body."""
-    from serverless_etl_aws_spark.queries.extras19 import graph_components
+    from serverless_etl_aws_spark.queries.graph import graph_components
 
     plan = plan_of(graph_components(spark, sf_dir))
     assert "Scan ExistingRDD" in plan
@@ -2194,7 +2168,7 @@ def test_agg_funnel_dims_broadcast_no_product(spark, sf_dir):
     """agg_funnel: every stage-to-stage attach is a broadcast equi-join
     (the funnel stages are tiny aggregates); the event scan never
     shuffles into a sort-merge join and never meets a product."""
-    from serverless_etl_aws_spark.queries.extras3 import agg_funnel
+    from serverless_etl_aws_spark.queries.aggregates import agg_funnel
 
     plan = plan_of(agg_funnel(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 2
@@ -2207,7 +2181,7 @@ def test_hard_negatives_probe_side_broadcast(spark, sf_dir):
     scoring join (BroadcastNestedLoopJoin with a k-row build side is the
     intended node — the corpus side must never shuffle or sort-merge),
     and candidate explosion happens via Generate, not a self-join."""
-    from serverless_etl_aws_spark.queries.extras8 import llm_hard_negatives
+    from serverless_etl_aws_spark.queries.llm import llm_hard_negatives
 
     plan = plan_of(llm_hard_negatives(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan
@@ -2242,7 +2216,7 @@ def test_udf_cogrouped_two_sides_one_cogroup(spark, sf_dir):
 def test_agg_unpivot_expands_via_generate_single_scan(spark, sf_dir):
     """agg_unpivot: wide→long goes through ONE Generate over ONE scan
     (melt-in-place) — never a per-measure UNION of re-scans."""
-    from serverless_etl_aws_spark.queries.extras5 import agg_unpivot
+    from serverless_etl_aws_spark.queries.aggregates import agg_unpivot
 
     plan = plan_of(agg_unpivot(spark, sf_dir))
     assert "Generate" in plan
@@ -2253,7 +2227,7 @@ def test_agg_unpivot_expands_via_generate_single_scan(spark, sf_dir):
 def test_fn_try_cast_fused_single_scan(spark, sf_dir):
     """fn_try_cast: per-row try_cast projection stays inside one
     whole-stage-codegen span over one scan — no exchange, no Python."""
-    from serverless_etl_aws_spark.queries.extras12 import fn_try_cast
+    from serverless_etl_aws_spark.queries.scalar_fns import fn_try_cast
 
     plan = plan_of(fn_try_cast(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -2266,7 +2240,7 @@ def test_agg_approx_quantile_partial_sketch_merge(spark, sf_dir):
     """agg_approx_quantile: the KLL/GK sketch aggregates partially on
     the map side and merges after ONE exchange (two ObjectHashAggregate
     stages) — the sketch never ships raw rows to one node."""
-    from serverless_etl_aws_spark.queries.extras2 import agg_approx_quantile
+    from serverless_etl_aws_spark.queries.aggregates import agg_approx_quantile
 
     plan = plan_of(agg_approx_quantile(spark, sf_dir))
     assert plan.count("ObjectHashAggregate") == 2
@@ -2313,7 +2287,7 @@ def test_win_sessionize_single_user_shuffle(spark, sf_dir):
     """win_sessionize: gap-flag + running session id are windows over
     the SAME user/ts ordering — one scan, windows stacked on one
     partitioning, no join."""
-    from serverless_etl_aws_spark.queries.extras3 import win_sessionize
+    from serverless_etl_aws_spark.queries.windows import win_sessionize
 
     plan = plan_of(win_sessionize(spark, sf_dir))
     assert plan.count("Window") >= 1
@@ -2325,7 +2299,7 @@ def test_subquery_scalar_broadcast_not_recompute_per_row(spark, sf_dir):
     """subquery_scalar: the scalar aggregate attaches via broadcast
     equi/1×1 join — the per-row plan never re-executes the aggregate
     subtree as a correlated loop (no product nodes)."""
-    from serverless_etl_aws_spark.queries.extras import subquery_scalar
+    from serverless_etl_aws_spark.queries.relational import subquery_scalar
 
     plan = plan_of(subquery_scalar(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 1
@@ -2336,7 +2310,7 @@ def test_cross_dedup_hash_only_shuffle(spark, sf_dir):
     """llm_cross_dedup: the cross-snapshot match joins on content HASH
     (broadcast of the smaller snapshot's hash set) — document text
     never shuffles, and the plan carries no product."""
-    from serverless_etl_aws_spark.queries.extras3 import llm_cross_dedup
+    from serverless_etl_aws_spark.queries.llm import llm_cross_dedup
 
     plan = plan_of(llm_cross_dedup(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
@@ -2348,7 +2322,7 @@ def test_zscore_outlier_stats_broadcast_back(spark, sf_dir):
     """agg_zscore_outlier: per-group stats aggregate once and broadcast
     back onto the row stream (BHJ) — never a self-join shuffle of the
     full fact table against itself."""
-    from serverless_etl_aws_spark.queries.extras2 import agg_zscore_outlier
+    from serverless_etl_aws_spark.queries.aggregates import agg_zscore_outlier
 
     plan = plan_of(agg_zscore_outlier(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
@@ -2359,7 +2333,7 @@ def test_zscore_outlier_stats_broadcast_back(spark, sf_dir):
 def test_win_frame_range_time_single_window(spark, sf_dir):
     """win_frame_range_time: the time-range frame is ONE Window over one
     sort/exchange on (user, ts) — no join, no second shuffle."""
-    from serverless_etl_aws_spark.queries.extras9 import win_frame_range_time
+    from serverless_etl_aws_spark.queries.windows import win_frame_range_time
 
     plan = plan_of(win_frame_range_time(spark, sf_dir))
     assert plan.count("Window") == 1
@@ -2384,7 +2358,7 @@ def test_sample_hash_fused_single_scan(spark, sf_dir):
     """sample_hash: deterministic hash-mod sampling is a fused
     filter+project over one scan — no exchange, no Python, no sort
     (sampling must not cost a shuffle at any scale)."""
-    from serverless_etl_aws_spark.queries.extras import sample_hash
+    from serverless_etl_aws_spark.queries.relational import sample_hash
 
     plan = plan_of(sample_hash(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -2396,7 +2370,7 @@ def test_bpe_encode_final_plan_reads_checkpoint(spark, sf_dir):
     """llm_bpe_encode (compute-eager): the iterative merge loop runs at
     build (pinned by the BPE operator tests); the returned relation
     reads checkpointed state — no join or product re-enters it."""
-    from serverless_etl_aws_spark.queries.extras9 import llm_bpe_encode
+    from serverless_etl_aws_spark.queries.llm import llm_bpe_encode
 
     plan = plan_of(llm_bpe_encode(spark, sf_dir))
     assert "Scan ExistingRDD" in plan
@@ -2413,7 +2387,7 @@ def test_win_streak_uses_window_group_limit(spark, sf_dir):
     """win_streak (r13 driver-audit slot): the per-user streak pick rides
     Spark 4's WindowGroupLimit pushdown (rank filter prunes partitions
     before the full window evaluates) — one scan, no join."""
-    from serverless_etl_aws_spark.queries.extras13 import win_streak
+    from serverless_etl_aws_spark.queries.windows import win_streak
 
     plan = plan_of(win_streak(spark, sf_dir))
     assert "WindowGroupLimit" in plan
@@ -2425,7 +2399,7 @@ def test_agg_corr_single_pass_partial(spark, sf_dir):
     """agg_corr (r13 driver-audit slot): the correlation's power sums
     aggregate partially map-side around ONE exchange over ONE scan —
     never a self-join of the measures."""
-    from serverless_etl_aws_spark.queries.extras13 import agg_corr
+    from serverless_etl_aws_spark.queries.aggregates import agg_corr
 
     plan = plan_of(agg_corr(spark, sf_dir))
     assert plan.count("HashAggregate") == 2
@@ -2438,7 +2412,7 @@ def test_join_lateral_decorrelates_to_window_limit(spark, sf_dir):
     """join_lateral (r13 driver-audit slot): the per-customer lateral
     top-k decorrelates to a window-group-limit + broadcast equi-join —
     never a correlated nested loop, never a product."""
-    from serverless_etl_aws_spark.queries.extras13 import join_lateral
+    from serverless_etl_aws_spark.queries.joins import join_lateral
 
     plan = plan_of(join_lateral(spark, sf_dir))
     assert "WindowGroupLimit" in plan
@@ -2461,7 +2435,7 @@ def test_stream_tumbling_result_is_materialized_read(spark, sf_dir):
 
 def test_win_percent_rank_single_window(spark, sf_dir):
     """win_percent_rank: one Window over one exchange, one scan."""
-    from serverless_etl_aws_spark.queries.extras2 import win_percent_rank
+    from serverless_etl_aws_spark.queries.windows import win_percent_rank
 
     plan = plan_of(win_percent_rank(spark, sf_dir))
     assert plan.count("Window") == 1
@@ -2473,7 +2447,7 @@ def test_win_percent_rank_single_window(spark, sf_dir):
 def test_win_ignore_nulls_single_window(spark, sf_dir):
     """win_ignore_nulls: the IGNORE NULLS gap-fill is ONE Window pass —
     never a self-join backfill."""
-    from serverless_etl_aws_spark.queries.extras12 import win_ignore_nulls
+    from serverless_etl_aws_spark.queries.windows import win_ignore_nulls
 
     plan = plan_of(win_ignore_nulls(spark, sf_dir))
     assert plan.count("Window") == 1
@@ -2495,7 +2469,7 @@ def test_join_full_outer_sort_merge(spark, sf_dir):
 def test_fn_url_fused_single_scan(spark, sf_dir):
     """fn_url: parse_url/regexp projections stay fused JVM-side over one
     scan — no exchange, no Python eval."""
-    from serverless_etl_aws_spark.queries.extras6 import fn_url
+    from serverless_etl_aws_spark.queries.scalar_fns import fn_url
 
     plan = plan_of(fn_url(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -2518,7 +2492,7 @@ def test_fn_math_cond_fused_single_scan(spark, sf_dir):
 def test_agg_conditional_partial_agg_single_scan(spark, sf_dir):
     """agg_conditional: FILTER-clause aggregates fold into ONE two-phase
     aggregation over ONE scan — never one scan per conditional sum."""
-    from serverless_etl_aws_spark.queries.extras7 import agg_conditional
+    from serverless_etl_aws_spark.queries.aggregates import agg_conditional
 
     plan = plan_of(agg_conditional(spark, sf_dir))
     assert plan.count("HashAggregate") == 2
@@ -2529,7 +2503,7 @@ def test_agg_conditional_partial_agg_single_scan(spark, sf_dir):
 def test_sample_weighted_fused_no_shuffle(spark, sf_dir):
     """sample_weighted: deterministic weighted sampling is a fused
     filter over one scan — sampling never costs a shuffle."""
-    from serverless_etl_aws_spark.queries.extras14 import sample_weighted
+    from serverless_etl_aws_spark.queries.relational import sample_weighted
 
     plan = plan_of(sample_weighted(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -2572,7 +2546,7 @@ def test_mm_frame_sample_single_arrow_pass(spark, sf_dir):
 def test_span_corruption_generate_single_scan(spark, sf_dir):
     """llm_span_corruption: span explosion is ONE Generate over ONE
     scan with partial aggregation — no join, no Python."""
-    from serverless_etl_aws_spark.queries.extras9 import llm_span_corruption
+    from serverless_etl_aws_spark.queries.llm import llm_span_corruption
 
     plan = plan_of(llm_span_corruption(spark, sf_dir))
     assert "Generate" in plan
@@ -2585,7 +2559,7 @@ def test_scan_csv_reads_csv_source(spark, sf_dir):
     """scan_csv (EAGER staging): the returned relation is a real CSV
     FileScan with the declared schema — the format round-trip is the
     contract (write parquet→csv→read)."""
-    from serverless_etl_aws_spark.queries.extras import scan_csv
+    from serverless_etl_aws_spark.queries.relational import scan_csv
 
     plan = plan_of(scan_csv(spark, sf_dir))
     assert "FileScan csv" in plan
@@ -2622,7 +2596,7 @@ def test_token_count_fused_single_scan(spark, sf_dir):
 
 def test_fn_date_arith_fused_single_scan(spark, sf_dir):
     """fn_date_arith: date arithmetic is one codegen span, one scan."""
-    from serverless_etl_aws_spark.queries.extras10 import fn_date_arith
+    from serverless_etl_aws_spark.queries.scalar_fns import fn_date_arith
 
     plan = plan_of(fn_date_arith(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -2657,14 +2631,14 @@ def test_window_family_single_shuffle_shapes(spark, sf_dir):
     ONE scan with no join — the shape that scales to any partition
     count (win_cume_dist / win_frame_rows / win_lag_lead /
     win_frame_range / llm_fingerprint / dim_scd2)."""
-    from serverless_etl_aws_spark.queries.extras import win_frame_range
-    from serverless_etl_aws_spark.queries.extras5 import win_cume_dist
-    from serverless_etl_aws_spark.queries.extras6 import dim_scd2
-    from serverless_etl_aws_spark.queries.llm import llm_fingerprint
     from serverless_etl_aws_spark.queries.windows import (
+        win_frame_range,
+        win_cume_dist,
         win_frame_rows,
         win_lag_lead,
     )
+    from serverless_etl_aws_spark.queries.pipeline_ops import dim_scd2
+    from serverless_etl_aws_spark.queries.llm import llm_fingerprint
 
     for fn in (win_cume_dist, win_frame_rows, win_lag_lead,
                win_frame_range, llm_fingerprint, dim_scd2):
@@ -2690,7 +2664,7 @@ def test_dedup_exact_uses_window_group_limit(spark, sf_dir):
 def test_snapshot_diff_sort_merge_no_product(spark, sf_dir):
     """dim_snapshot_diff: the two snapshots FULL-OUTER sort-merge on the
     business key — never a product, never a nested loop."""
-    from serverless_etl_aws_spark.queries.extras10 import dim_snapshot_diff
+    from serverless_etl_aws_spark.queries.pipeline_ops import dim_snapshot_diff
 
     plan = plan_of(dim_snapshot_diff(spark, sf_dir))
     assert "SortMergeJoin" in plan
@@ -2703,7 +2677,7 @@ def test_set_except_all_counted_not_joined(spark, sf_dir):
     deltas + Generate replication — no join node at all (the
     shuffle-once shape; a join formulation would shuffle both sides
     then still need the multiplicity arithmetic)."""
-    from serverless_etl_aws_spark.queries.extras7 import set_except_all
+    from serverless_etl_aws_spark.queries.sorts_sets import set_except_all
 
     plan = plan_of(set_except_all(spark, sf_dir))
     assert "Generate" in plan
@@ -2756,7 +2730,7 @@ def test_mix_weights_scalar_attach_only(spark, sf_dir):
     """llm_mix_weights: the only product-shaped node is the 1×1 scalar
     total attach (BroadcastNestedLoopJoin with a 1-row build) — never a
     true cartesian, never a sort-merge of the doc relation."""
-    from serverless_etl_aws_spark.queries.extras6 import llm_mix_weights
+    from serverless_etl_aws_spark.queries.llm import llm_mix_weights
 
     plan = plan_of(llm_mix_weights(spark, sf_dir))
     assert "CartesianProduct" not in plan
@@ -2773,13 +2747,16 @@ def test_scan_family_fused_single_scans(spark, sf_dir):
     """scan_parquet / filter_null / fn_string / fn_date /
     fn_higher_order / sample_stratified: one fused codegen span over
     one scan, no exchange, no Python — per-row work must never shuffle."""
-    from serverless_etl_aws_spark.queries.extras4 import sample_stratified
-    from serverless_etl_aws_spark.queries.extras9 import fn_higher_order
     from serverless_etl_aws_spark.queries.relational import (
+        sample_stratified,
         filter_null,
         scan_parquet,
     )
-    from serverless_etl_aws_spark.queries.scalar_fns import fn_date, fn_string
+    from serverless_etl_aws_spark.queries.scalar_fns import (
+        fn_higher_order,
+        fn_date,
+        fn_string,
+    )
 
     for fn in (scan_parquet, filter_null, fn_string, fn_date,
                fn_higher_order, sample_stratified):
@@ -2821,8 +2798,10 @@ def test_win_rank_uses_window_group_limit(spark, sf_dir):
 def test_win_running_and_ntile_single_window(spark, sf_dir):
     """win_running / win_ntile_first_last: one Window, one exchange,
     one scan, no join."""
-    from serverless_etl_aws_spark.queries.extras import win_ntile_first_last
-    from serverless_etl_aws_spark.queries.windows import win_running
+    from serverless_etl_aws_spark.queries.windows import (
+        win_ntile_first_last,
+        win_running,
+    )
 
     for fn in (win_running, win_ntile_first_last):
         plan = plan_of(fn(spark, sf_dir))
@@ -2875,7 +2854,7 @@ def test_set_family_shapes(spark, sf_dir):
 def test_subquery_in_rewrites_to_semi_join(spark, sf_dir):
     """subquery_in: the IN-subquery decorrelates to a broadcast
     left-semi join — never a per-row subquery loop."""
-    from serverless_etl_aws_spark.queries.extras import subquery_in
+    from serverless_etl_aws_spark.queries.relational import subquery_in
 
     plan = plan_of(subquery_in(spark, sf_dir))
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
@@ -2912,7 +2891,7 @@ def test_explode_family_generate_no_shuffle(spark, sf_dir):
 def test_agg_pivot_two_phase_no_rescan(spark, sf_dir):
     """agg_pivot: the pivot compiles to aggregate pipelines over ONE
     scan — never one scan per pivoted column."""
-    from serverless_etl_aws_spark.queries.extras import agg_pivot
+    from serverless_etl_aws_spark.queries.aggregates import agg_pivot
 
     plan = plan_of(agg_pivot(spark, sf_dir))
     assert plan.count("FileScan parquet") == 1
@@ -2922,7 +2901,7 @@ def test_agg_pivot_two_phase_no_rescan(spark, sf_dir):
 def test_agg_collect_object_hash_partial(spark, sf_dir):
     """agg_collect: collect_list/set aggregates partially map-side
     (two ObjectHashAggregate stages around one exchange)."""
-    from serverless_etl_aws_spark.queries.extras import agg_collect
+    from serverless_etl_aws_spark.queries.aggregates import agg_collect
 
     plan = plan_of(agg_collect(spark, sf_dir))
     assert plan.count("ObjectHashAggregate") == 2
@@ -2950,13 +2929,15 @@ def test_scan_formats_read_their_own_sources(spark, sf_dir):
     """scan_json/orc/text/xml/binaryfile/jdbc/pydatasource: each key
     stages the fixture into its format and the RETURNED relation scans
     THAT source — the format round-trip is the contract."""
-    from serverless_etl_aws_spark.queries.extras import scan_json
-    from serverless_etl_aws_spark.queries.extras2 import scan_orc
-    from serverless_etl_aws_spark.queries.extras5 import scan_binaryfile
-    from serverless_etl_aws_spark.queries.extras7 import scan_text
-    from serverless_etl_aws_spark.queries.extras8 import scan_xml
-    from serverless_etl_aws_spark.queries.extras11 import scan_jdbc
-    from serverless_etl_aws_spark.queries.relational import scan_pydatasource
+    from serverless_etl_aws_spark.queries.relational import (
+        scan_json,
+        scan_orc,
+        scan_binaryfile,
+        scan_text,
+        scan_xml,
+        scan_jdbc,
+        scan_pydatasource,
+    )
 
     for fn, marker in (
         (scan_json, "FileScan json"),
@@ -2978,14 +2959,14 @@ def test_fused_scalar_tail_single_scans(spark, sf_dir):
     llm_embed_quantize: one fused codegen span over one scan — no
     exchange, no Python (the PII scrub and the md5 split are pure JVM
     regex/hash expressions by design)."""
-    from serverless_etl_aws_spark.queries.extras2 import fn_struct_map
-    from serverless_etl_aws_spark.queries.extras4 import llm_data_split
-    from serverless_etl_aws_spark.queries.extras6 import (
+    from serverless_etl_aws_spark.queries.scalar_fns import (
+        fn_struct_map,
         fn_binary_codec,
         fn_regexp_extract_all,
+        fn_bitwise,
     )
-    from serverless_etl_aws_spark.queries.extras7 import fn_bitwise
     from serverless_etl_aws_spark.queries.llm import (
+        llm_data_split,
         llm_embed_quantize,
         llm_pii_scrub,
     )
@@ -3013,7 +2994,7 @@ def test_mm_decode_resize_single_arrow_pass(spark, sf_dir):
 def test_agg_histogram_two_phase_single_scan(spark, sf_dir):
     """agg_histogram: bucket counts are one two-phase aggregate over
     one scan — the floor-bucket histogram never joins or re-scans."""
-    from serverless_etl_aws_spark.queries.extras5 import agg_histogram
+    from serverless_etl_aws_spark.queries.aggregates import agg_histogram
 
     plan = plan_of(agg_histogram(spark, sf_dir))
     assert plan.count("HashAggregate") == 2
@@ -3071,11 +3052,9 @@ def test_maintenance_rollup_results_read_back_clean(spark, sf_dir):
     mutating keys): the commit/vacuum/rollup cycle runs at build and
     the returned relation is a plain read of the committed table —
     no join or product re-enters the final plan."""
-    from serverless_etl_aws_spark.queries.extras5 import maintenance_vacuum
-    from serverless_etl_aws_spark.queries.extras12 import (
-        maintenance_delete_rows,
-    )
     from serverless_etl_aws_spark.queries.pipeline_ops import (
+        maintenance_vacuum,
+        maintenance_delete_rows,
         export_warehouse,
         rollup_incremental,
         rollup_upsert,
@@ -3126,7 +3105,7 @@ def test_anomaly_mad_no_product(spark, sf_dir):
     """ts_anomaly_mad: the median/MAD branches attach per-type via
     broadcast equi-joins — never a product, never a sort-merge of the
     event stream against itself."""
-    from serverless_etl_aws_spark.queries.extras13 import ts_anomaly_mad
+    from serverless_etl_aws_spark.queries.ts import ts_anomaly_mad
 
     plan = plan_of(ts_anomaly_mad(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
@@ -3139,8 +3118,10 @@ def test_ann_family_one_arrow_pass_topk(spark, sf_dir):
     Arrow-batched MapInPandas pass over the corpus scan finished by
     TakeOrderedAndProject — no shuffle of the corpus, no global sort,
     no join (candidates are pruned INSIDE the batch)."""
-    from serverless_etl_aws_spark.queries.extras6 import llm_sim_search_pq
-    from serverless_etl_aws_spark.queries.llm import llm_sim_search_ivf
+    from serverless_etl_aws_spark.queries.llm import (
+        llm_sim_search_pq,
+        llm_sim_search_ivf,
+    )
 
     for fn in (llm_sim_search_ivf, llm_sim_search_pq):
         plan = plan_of(fn(spark, sf_dir))
@@ -3166,7 +3147,7 @@ def test_bpe_train_final_plan_reads_checkpoint(spark, sf_dir):
     """llm_bpe_train (compute-eager): the merge-iteration loop runs at
     build; the returned vocabulary relation reads checkpointed state —
     no join re-enters."""
-    from serverless_etl_aws_spark.queries.extras9 import llm_bpe_train
+    from serverless_etl_aws_spark.queries.llm import llm_bpe_train
 
     plan = plan_of(llm_bpe_train(spark, sf_dir))
     assert "Scan ExistingRDD" in plan
@@ -3177,7 +3158,7 @@ def test_set_intersect_all_counted_not_joined(spark, sf_dir):
     """set_intersect_all: bag INTERSECT ALL resolves via per-key count
     minima + Generate replication — no join node (set_except_all's
     sibling shape)."""
-    from serverless_etl_aws_spark.queries.extras7 import set_intersect_all
+    from serverless_etl_aws_spark.queries.sorts_sets import set_intersect_all
 
     plan = plan_of(set_intersect_all(spark, sf_dir))
     assert "Generate" in plan

@@ -20,12 +20,12 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from serverless_etl_aws_spark.queries.extras19 import TS_TREND_MK_SQL
-from serverless_etl_aws_spark.queries.extras20 import (
-    AGG_KS_TEST_SQL,
+from serverless_etl_aws_spark.queries.ts import TS_TREND_MK_SQL
+from serverless_etl_aws_spark.queries.aggregates import AGG_KS_TEST_SQL
+from serverless_etl_aws_spark.queries.ml import (
     ML_STUMP_SQL,
+    ML_SURVIVAL_KM_SQL,
 )
-from serverless_etl_aws_spark.queries.extras21 import ML_SURVIVAL_KM_SQL
 
 #: (day 1..12, value 0..30, is_purchase) event rows — small domains so
 #: ties and degenerate splits are FREQUENT (that is where formula bugs
