@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from . import schemas
+from . import memo, schemas
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -116,11 +116,6 @@ def events_reader_setup(spark: SparkSession, path: str):
     return schemas.EVENTS, (lambda df: df)
 
 
-#: Footer column-name checks already performed this process, keyed by
-#: (path, mtime_ns) so an in-place fixture regeneration re-checks.
-_FOOTER_CHECKED: set = set()
-
-
 def _check_footer_names(path: str, schema) -> None:
     """Loud load-time drift check: ``spark.read.schema(...)`` silently
     NULL-fills a column the file no longer has (dropped/renamed), which
@@ -130,13 +125,8 @@ def _check_footer_names(path: str, schema) -> None:
     s3a handler driver-side) and single-file tables only — the fixtures'
     layout; declared-evolution reads (scan_merge_schema) go through their
     own explicit contract, not this loader."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return  # non-local or missing: let the Spark read surface it
-    key = (path, st.st_mtime_ns)
-    if key in _FOOTER_CHECKED or not os.path.isfile(path):
-        return
+    if not os.path.isfile(path):
+        return  # non-local, missing or a directory: the read surfaces it
     import pyarrow.parquet as pq
 
     footer_names = set(pq.read_schema(path).names)
@@ -146,21 +136,6 @@ def _check_footer_names(path: str, schema) -> None:
             f"fixture drift: {path} no longer has column(s) {missing} "
             f"declared in schemas.py — a silent read would NULL-fill them"
         )
-    _FOOTER_CHECKED.add(key)
-
-
-#: Base-scan DataFrame memo, keyed (applicationId, path, mtime_ns, size,
-#: name). The cached object is the LAZY scan relation — no rows, no
-#: results; every execution still computes from the parquet files. What
-#: the memo removes is the per-call driver work of rebuilding an
-#: identical relation: schema ship + file listing + footer checks +
-#: eager re-analysis of the column-order projection (measured 23–46 ms
-#: per load_table call, 1–3 calls per registry key — a fixed per-key
-#: tax the scaling block showed no core count can touch). mtime_ns/size
-#: in the key invalidate on fixture regeneration; non-statable paths
-#: (object stores) skip the memo — a cluster's driver would hold its
-#: catalog's resolved relations the same way.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -171,38 +146,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     is pinned. ``events.ts`` goes through :func:`events_reader_setup`, which
     sniffs the stored timestamp unit from the parquet footer and branches —
     the fixtures have switched units between rounds, so the footer is the
-    source of truth. The built relation is memoized per session + on-disk
-    content (see :data:`_TABLE_CACHE`).
+    source of truth.
+
+    The built relation is memoized per session and table content
+    (:mod:`.memo`). It is the LAZY scan relation — no rows; every
+    execution still reads the files. The memo removes the per-call
+    driver work of rebuilding an identical relation: schema ship, file
+    listing, footer checks and eager re-analysis of the column-order
+    projection (measured 23–46 ms per call, 1–3 calls per registry key).
     """
     if name not in schemas.TABLES:
         raise KeyError(f"unknown table {name!r}; known: {sorted(schemas.TABLES)}")
-    schema = schemas.TABLES[name]
     path = table_path(sf_dir, name)
-    ckey = None
-    try:
-        st = os.stat(path)
-        ckey = (
-            spark.sparkContext.applicationId,
-            os.path.abspath(path),
-            st.st_mtime_ns,
-            st.st_size,
-            name,
-        )
-    except OSError:
-        pass  # non-local/missing: uncached, let the read surface it
-    if ckey is not None and ckey in _TABLE_CACHE:
-        return _TABLE_CACHE[ckey]
+    key = ("table", spark.sparkContext.applicationId, memo.fingerprint(path))
+    return memo.cached(key, lambda: _scan(spark, path, name))
+
+
+def _scan(spark: SparkSession, path: str, name: str) -> DataFrame:
+    schema = schemas.TABLES[name]
     _check_footer_names(path, schema)
     if name == "events":
         read_schema, normalize = events_reader_setup(spark, path)
         df = normalize(spark.read.schema(read_schema).parquet(path))
-        df = df.select(*[f.name for f in schema.fields])
     else:
         df = spark.read.schema(schema).parquet(path)
-        df = df.select(*[f.name for f in schema.fields])
-    if ckey is not None:
-        _TABLE_CACHE[ckey] = df
-    return df
+    return df.select(*[f.name for f in schema.fields])
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

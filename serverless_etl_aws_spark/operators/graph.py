@@ -406,6 +406,10 @@ def kcore_peel(
     times, drop every node whose degree in ``adj`` is below ``k``, then
     return each survivor's residual degree as ``(node_col, d)``.
 
+    Calling it runs Spark jobs: at least one per peel round, to
+    materialize that round's degree relation. It is not a free plan
+    builder: a registry key built on it declares ``eager="compute"``.
+
     ``adj`` must be a symmetric distinct adjacency (both directions
     present). Each round materializes the NODE-sized degree relation
     once (eager, so the round's drop count rides that same job as an

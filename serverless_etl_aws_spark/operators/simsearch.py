@@ -19,10 +19,10 @@ ranking with a vec_id tiebreak so top-k boundaries are engine-stable.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .. import memo
 
 # Sequential left-fold dot product / norm over array<double> columns —
 # bit-identical to DuckDB's list_sum(list_transform(...)) evaluation order.
@@ -211,44 +211,12 @@ def _fold_dot(a, b) -> float:
     return acc
 
 
-#: Trained coarse quantizers, keyed by (corpus_key, n_centroids, seed).
-#: An IVF index is a PERSISTED artifact in any real deployment (FAISS
-#: writes it to disk; a 100 TB corpus trains it once per ingest, not per
-#: query) — re-fitting per probe would be the wrong design at any scale.
-#: Opt-in via ``corpus_key`` because a DataFrame alone can't tell the
-#: engine whether its underlying corpus changed — build the key with
-#: :func:`corpus_cache_key` so a regenerated corpus invalidates it.
-_CENTROID_CACHE: dict = {}
-
-
-def clear_centroid_cache() -> None:
-    """Drop every cached coarse quantizer (test/maintenance hook)."""
-    _CENTROID_CACHE.clear()
-
-
-def corpus_cache_key(path: str, label: str = "") -> str:
-    """Build a ``corpus_key`` bound to the on-disk corpus CONTENT, not
-    just its path: the parquet file's (mtime_ns, size) — every member's,
-    for a directory — is folded in, so regenerating a fixture in place
-    retrains the quantizer instead of silently serving stale centroids
-    (a long-lived bench/pytest process would otherwise never notice).
-    Local filesystems only; an object-store deployment would fold in the
-    listing's ETags the same way."""
-    parts = [label or path]
-    if os.path.isdir(path):
-        # Recursive: a Hive-partitioned corpus keeps its data files in
-        # subdirectories — a top-level-only listing would produce a
-        # content-free key and defeat the invalidation this exists for.
-        for root, dirs, files in sorted(os.walk(path)):
-            for m in sorted(files):
-                if m.endswith(".parquet") and not m.startswith((".", "_")):
-                    st = os.stat(os.path.join(root, m))
-                    rel = os.path.relpath(os.path.join(root, m), path)
-                    parts.append(f"{rel}:{st.st_mtime_ns}:{st.st_size}")
-    else:
-        st = os.stat(path)
-        parts.append(f"{st.st_mtime_ns}:{st.st_size}")
-    return "|".join(parts)
+def _sample_vec(sample, vec_id: int) -> list[float] | None:
+    """The vector of ``vec_id`` if the training sample holds it."""
+    return next(
+        ([float(x) for x in r["v"]] for r in sample if r["vec_id"] == vec_id),
+        None,
+    )
 
 
 def ivf_topk(
@@ -258,7 +226,6 @@ def ivf_topk(
     n_centroids: int = 16,
     nprobe: int = 4,
     seed: int = 42,
-    corpus_key: str | None = None,
 ) -> DataFrame:
     """IVF-pruned cosine top-k: assign every vector to its max-cosine
     centroid, search only the probe's ``nprobe`` best clusters.
@@ -279,6 +246,14 @@ def ivf_topk(
     expression tree per invocation dominates at any data size.) The
     training sample doubles as the probe-vector lookup when the probe id
     falls inside it.
+
+    The trained quantizer is memoized per corpus
+    (:func:`..memo.frame_fingerprint` of ``embeddings``, plus
+    ``n_centroids`` and ``seed``): an IVF index is a persisted artifact
+    in any real deployment — FAISS writes it to disk, and a 100 TB
+    corpus trains it once per ingest, not per query. Rewriting the
+    corpus in place retrains; a frame without local file lineage trains
+    on every call.
     """
     import math
 
@@ -301,24 +276,19 @@ def ivf_topk(
             F.lit(0.0).cast("double").alias("cosine"),
             F.lit(0).cast("int").alias("cid"),
         )
-    ckey = (corpus_key, n_centroids, seed) if corpus_key else None
-    pv = None
-    if ckey is not None and ckey in _CENTROID_CACHE:
-        C = _CENTROID_CACHE[ckey]
-    else:
-        # One recipe, one collect: _train_centroids owns the sampling
-        # contract and hands back the sample for the probe lookup below.
-        C, sample = _train_centroids(emb, n_centroids, seed)
-        if ckey is not None:
-            _CENTROID_CACHE[ckey] = C
-        pv = next(
-            (
-                [float(x) for x in r["v"]]
-                for r in sample
-                if r["vec_id"] == probe_vec_id
-            ),
-            None,
-        )
+    # One recipe, one collect: _train_centroids owns the sampling
+    # contract and hands back the sample for the probe lookup below.
+    sample = []
+
+    def train():
+        C, rows = _train_centroids(emb, n_centroids, seed)
+        sample.extend(rows)
+        return C
+
+    C = memo.cached(
+        ("ivf", memo.frame_fingerprint(embeddings), n_centroids, seed), train
+    )
+    pv = _sample_vec(sample, probe_vec_id)
     if pv is None:  # probe outside the deterministic training sample
         probe_rows = (
             emb.filter(F.col("vec_id") == probe_vec_id).select("v").collect()
@@ -392,16 +362,6 @@ def ivf_topk(
 
 # --------------------------------------------------------------------- PQ
 
-#: Trained PQ codebooks, keyed by (corpus_key, m, ksub, seed) — the same
-#: persisted-index contract as _CENTROID_CACHE (see its comment).
-_PQ_CACHE: dict = {}
-
-
-def clear_pq_cache() -> None:
-    """Drop every cached PQ codebook (test/maintenance hook)."""
-    _PQ_CACHE.clear()
-
-
 def _train_pq_codebooks(emb, m: int, ksub: int, seed: int, train_cap: int):
     """Fit product-quantization codebooks FAISS-style: L2-normalize the
     training vectors, split the dimension into ``m`` contiguous
@@ -451,7 +411,6 @@ def pq_topk(
     ksub: int = 64,
     refine: int = 8,
     seed: int = 7,
-    corpus_key: str | None = None,
 ) -> DataFrame:
     """Product-quantization ANN top-k with asymmetric-distance scoring
     and exact re-ranking — the memory-bound scale path of the similarity
@@ -477,7 +436,11 @@ def pq_topk(
     pairwise/SIMD summation may differ from a JVM left-fold in the last
     ulp — tolerated BY DESIGN here, because PQ scores are lossy by
     construction and the key is recall-tested, never hash-compared
-    (the ivf_topk tolerance note applies verbatim)."""
+    (the ivf_topk tolerance note applies verbatim).
+
+    Codebooks are memoized per corpus the same way as the IVF
+    quantizer (see :func:`ivf_topk`), plus ``m``, ``ksub`` and
+    ``seed``."""
     import numpy as np
 
     # NULL vectors excluded for the same reason as ivf_topk (missing
@@ -490,22 +453,17 @@ def pq_topk(
         return emb.select(
             "vec_id", F.lit(0.0).cast("double").alias("cosine")
         )
-    ckey = (corpus_key, m, ksub, seed) if corpus_key else None
-    pv = None
-    if ckey is not None and ckey in _PQ_CACHE:
-        books = _PQ_CACHE[ckey]
-    else:
-        books, sample = _train_pq_codebooks(emb, m, ksub, seed, 100_000)
-        if ckey is not None:
-            _PQ_CACHE[ckey] = books
-        pv = next(
-            (
-                [float(x) for x in r["v"]]
-                for r in sample
-                if r["vec_id"] == probe_vec_id
-            ),
-            None,
-        )
+    sample = []
+
+    def train():
+        books, rows = _train_pq_codebooks(emb, m, ksub, seed, 100_000)
+        sample.extend(rows)
+        return books
+
+    books = memo.cached(
+        ("pq", memo.frame_fingerprint(embeddings), m, ksub, seed), train
+    )
+    pv = _sample_vec(sample, probe_vec_id)
     if pv is None:
         probe_rows = (
             emb.filter(F.col("vec_id") == probe_vec_id).select("v").collect()

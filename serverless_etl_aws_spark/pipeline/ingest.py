@@ -252,33 +252,45 @@ class IncrementalIngest:
         return IngestResult(counts["files"], counts["rows"], counts["batches"])
 
     def _seen_files(self) -> int:
-        """Count DISTINCT files recorded in the checkpoint's file-source
-        log (the engine's replacement for tag-based bookkeeping).
+        """Count the files recorded in the checkpoint's file-source log."""
+        return len(seen_files(self.checkpoint_dir))
 
-        Paths are deduped into a set because Spark compacts the log every
-        10 batches into ``.compact`` files that REPEAT all prior entries —
-        naive line counting over-counts after compaction. Local-filesystem
-        checkpoints only (``os.listdir``); for object-store checkpoints
-        this reporting hook would need the Hadoop FS API — ingest
-        correctness itself never depends on this count."""
-        src_dir = os.path.join(self.checkpoint_dir, "sources", "0")
-        if not os.path.isdir(src_dir):
-            return 0
-        import json
 
-        seen: set[str] = set()
-        for log in os.listdir(src_dir):
-            path = os.path.join(src_dir, log)
-            if not os.path.isfile(path) or log.startswith("."):
-                continue
-            with open(path, errors="ignore") as f:
-                for line in f:
-                    line = line.strip()
-                    if line.startswith("{"):
-                        try:
-                            entry = json.loads(line)
-                        except json.JSONDecodeError:
-                            continue
-                        if "path" in entry:
-                            seen.add(entry["path"])
-        return len(seen)
+def seen_files(checkpoint_dir: str) -> set[str]:
+    """Absolute local paths of every bronze file the checkpoint's
+    file-source log records as processed (the engine's replacement for
+    tag-based bookkeeping).
+
+    Paths are collected into a set because Spark compacts the log every
+    10 batches into ``.compact`` files that REPEAT all prior entries, so
+    counting lines over-counts after compaction. The log stores
+    URL-encoded ``file:`` URIs; they are decoded so they compare equal
+    to a directory listing. Local-filesystem checkpoints only
+    (``os.listdir``); an object-store checkpoint would read the log
+    through the Hadoop FS API. Ingest correctness never depends on this
+    reader."""
+    import json
+    import urllib.parse
+
+    src_dir = os.path.join(checkpoint_dir, "sources", "0")
+    seen: set[str] = set()
+    if not os.path.isdir(src_dir):
+        return seen
+    for log in os.listdir(src_dir):
+        path = os.path.join(src_dir, log)
+        if not os.path.isfile(path) or log.startswith("."):
+            continue
+        with open(path, errors="ignore") as f:
+            for line in f:
+                line = line.strip()
+                if not line.startswith("{"):
+                    continue
+                try:
+                    entry = json.loads(line)
+                except json.JSONDecodeError:
+                    continue
+                uri = entry.get("path", "")
+                if uri:
+                    local = urllib.parse.unquote(urllib.parse.urlparse(uri).path)
+                    seen.add(os.path.abspath(local))
+    return seen

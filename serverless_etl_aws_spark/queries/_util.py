@@ -34,12 +34,11 @@ isfinite CASE where ±Inf can reach the floor.
 from __future__ import annotations
 
 import os
-import urllib.parse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
+from .. import catalog, memo
 
 DEC = "decimal(18,4)"
 
@@ -48,48 +47,27 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return catalog.load_table(spark, sf_dir, name)
 
 
-#: Row-group counts per fixture file, keyed (path, mtime_ns) — the
-#: splittability gate behind :func:`spread` (a parquet scan task cannot
-#: split a row group, so row groups bound a file's scan parallelism).
-_ROW_GROUP_CACHE: dict[tuple, int] = {}
-
-
 def natural_scan_tasks(sf_dir: str, name: str) -> int:
     """Upper bound on the scan parallelism the fixture layout allows for
     table ``name``: total parquet row groups across its member files
     (each row group is read by exactly one task — Spark cannot split
-    one). Driver-side footer metadata only (cached per path+mtime); a
-    non-local path returns a large sentinel — cluster tables are
+    one). Driver-side footer metadata only (memoized per table content);
+    a non-local path returns a large sentinel — cluster tables are
     many-row-group by construction and the caller's gate must read
     "already parallel enough" there."""
-    path = catalog.table_path(sf_dir, name)
-    if "://" in path and not path.startswith("file://"):
+    fp = memo.fingerprint(catalog.table_path(sf_dir, name))
+    if fp is None:
         return 1 << 20
-    try:
-        st = os.stat(path)
-    except OSError:
-        return 1 << 20
-    key = (path, st.st_mtime_ns)
-    hit = _ROW_GROUP_CACHE.get(key)
-    if hit is not None:
-        return hit
-    import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        n = 0
-        for root, dirs, files in os.walk(path):
-            for fname in files:
-                if fname.endswith(".parquet") and not fname.startswith(
-                    (".", "_")
-                ):
-                    n += pq.ParquetFile(
-                        os.path.join(root, fname)
-                    ).metadata.num_row_groups
-    else:
-        n = pq.ParquetFile(path).metadata.num_row_groups
-    n = max(1, n)
-    _ROW_GROUP_CACHE[key] = n
-    return n
+    def count() -> int:
+        import pyarrow.parquet as pq
+
+        return max(1, sum(
+            pq.ParquetFile(f).metadata.num_row_groups
+            for f, _, _ in fp[1] if f.endswith(".parquet")
+        ))
+
+    return memo.cached(("row_groups", fp), count)
 
 
 def spread(df: DataFrame, sf_dir: str, table: str = "lineitem") -> DataFrame:
@@ -176,58 +154,6 @@ def sql_vec_finite(expr: str = "embedding") -> str:
     )
 
 
-#: Modal-dim cache: (sorted source files + mtime_ns/size, col) → mode.
-#: vec_dim_mode is an EAGER O(1)-result job; without the cache every
-#: embedding key re-scans the corpus once per DataFrame CONSTRUCTION
-#: (including plan/explain-only paths — ADVICE r12). The key is bound to
-#: the on-disk content (same discipline as simsearch.corpus_cache_key),
-#: so a regenerated fixture invalidates it; DataFrames with no file
-#: lineage (createDataFrame in tests) or non-local URIs skip the cache.
-_DIM_MODE_CACHE: dict[tuple[str, str], int | None] = {}
-
-
-def clear_dim_mode_cache() -> None:
-    """Drop every cached modal dim (test/maintenance hook)."""
-    _DIM_MODE_CACHE.clear()
-
-
-def _content_key(emb: DataFrame) -> str | None:
-    """Content-bound cache key for a file-backed DataFrame: the analyzed
-    plan's semantic fingerprint plus its source files' (path, mtime_ns,
-    size), or None when the lineage has no local files (in-memory test
-    frames, non-file URIs) — those stay uncached.
-
-    The plan fingerprint keeps two DIFFERENT relations over the same
-    files apart (a filtered subset must not poison the raw table's
-    cached mode, and vice versa); the file stats bind the key to on-disk
-    content so a rewritten fixture invalidates naturally."""
-    try:
-        files = sorted(emb.inputFiles())
-    except Exception:  # pragma: no cover — non-file-source plans
-        return None
-    if not files:
-        return None
-    try:
-        plan_fp = str(emb._jdf.queryExecution().analyzed().semanticHash())
-    except Exception:  # pragma: no cover — fail safe: uncached
-        return None
-    parts = [plan_fp]
-    for uri in files:
-        # file://HOST/path (authority form) is NOT a local path this
-        # process can stat — urlparse keeps the host separate instead of
-        # the old slash-stripping turning it into /HOST/path.
-        parsed = urllib.parse.urlparse(uri)
-        if parsed.scheme != "file" or parsed.netloc not in ("", "localhost"):
-            return None
-        p = urllib.parse.unquote(parsed.path)
-        try:
-            st = os.stat(p)
-        except OSError:
-            return None
-        parts.append(f"{p}:{st.st_mtime_ns}:{st.st_size}")
-    return "|".join(parts)
-
-
 def vec_dim_mode(emb: DataFrame, col: str = "embedding") -> int | None:
     """The corpus's dominant (modal) vector dimension — the round-12
     ragged-dims contract's reference dim. A vector whose dimension
@@ -243,28 +169,27 @@ def vec_dim_mode(emb: DataFrame, col: str = "embedding") -> int | None:
     :func:`sql_vec_dim_ok`. Returns None on a corpus with no vectors
     (callers skip the filter — the relation is empty anyway).
 
-    Memoized per (analyzed-plan fingerprint, on-disk corpus content)
-    (``_DIM_MODE_CACHE``): the mode is a corpus property, so one scan
-    per fixture per process — not one per DataFrame construction. The
-    plan fingerprint in the key means a caller that passes a FILTERED
-    subset gets its own entry rather than poisoning (or inheriting)
+    Memoized per :func:`..memo.frame_fingerprint` (analyzed plan plus
+    on-disk corpus content): the mode is a corpus property, so one scan
+    per fixture per process — not one per DataFrame construction, which
+    includes plan/explain-only paths. Frames with no local file lineage
+    stay uncached. The plan hash in the key means a caller that passes
+    a FILTERED subset gets its own entry rather than poisoning (or inheriting)
     the raw table's mode — but the contract is still "pass the RAW
     table": the reference dim is a property of the whole corpus, and a
     subset's mode is simply not that number."""
-    ck = _content_key(emb)
-    if ck is not None and (ck, col) in _DIM_MODE_CACHE:
-        return _DIM_MODE_CACHE[(ck, col)]
-    row = (
-        emb.filter(F.col(col).isNotNull())
-        .groupBy(F.size(F.col(col)).alias("d"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("d").asc())
-        .first()
-    )
-    mode = int(row["d"]) if row is not None else None
-    if ck is not None:
-        _DIM_MODE_CACHE[(ck, col)] = mode
-    return mode
+
+    def mode() -> int | None:
+        row = (
+            emb.filter(F.col(col).isNotNull())
+            .groupBy(F.size(F.col(col)).alias("d"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .orderBy(F.col("n").desc(), F.col("d").asc())
+            .first()
+        )
+        return int(row["d"]) if row is not None else None
+
+    return memo.cached(("dim_mode", memo.frame_fingerprint(emb), col), mode)
 
 
 def vec_dim_ok(emb: DataFrame, col: str = "embedding") -> Column:
@@ -521,20 +446,25 @@ def nation_trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-level cache for the graph family's shared edge relations
-# (VERDICT r6 residual nit → ADVICE r6 #3): graph_bfs and
-# graph_degree_dist both consume the co-order part adjacency, and
-# graph_jaccard re-derives the supplier-part bipartite edges on every
-# call — each rebuild is a full lineitem self-join/distinct. Memoizing
-# the MATERIALIZED relation per (applicationId, sf_dir) follows the BPE
-# merge-engine pattern (llm._BPE_CACHE): one FileScan + one
-# distinct-shuffle per session for the whole family, and warm bench runs
-# start from the checkpoint instead of re-deriving edges. Keyed by
-# applicationId so a restarted session can never see another JVM's
-# checkpointed RDDs. 100 TB posture: this IS the "materialized shared
-# edge relation" a production graph tier maintains as a table; the
-# session memo is its single-job equivalent.
-_GRAPH_EDGE_CACHE: dict[tuple, DataFrame] = {}
+def _lineitem_edges(spark: SparkSession, sf_dir: str, kind: str, plan):
+    """Session memo for the graph family's shared edge relations: one
+    lineitem-derived relation per (session, lineitem content, ``kind``),
+    built from ``plan()`` and lineage-truncated via
+    operators.graph.materialize (which honors the reliable-checkpoint
+    opt-in — the cluster posture for state that outlives one stage).
+    Several keys consume the same edges, and each rebuild is a full
+    lineitem self-join or distinct; memoizing the MATERIALIZED relation
+    gives one FileScan and one distinct shuffle per session for the
+    family, and warm builds start from the checkpoint. 100 TB posture:
+    this is the materialized edge table a production graph tier
+    maintains; the session memo is its single-job equivalent."""
+    from ..operators.graph import materialize
+
+    key = (
+        "edges", spark.sparkContext.applicationId,
+        memo.fingerprint(catalog.table_path(sf_dir, "lineitem")), kind,
+    )
+    return memo.cached(key, lambda: materialize(plan()))
 
 
 def co_order_part_adj_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -558,19 +488,12 @@ def co_order_part_adj_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def co_order_part_adj(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric distinct adjacency ``(node, nbr)`` of the co-order part
     graph (parts are adjacent when some order contains both). Built
-    once per session+corpus from :func:`co_order_part_adj_plan`, then
-    lineage-truncated via operators.graph.materialize (which honors the
-    reliable-checkpoint opt-in — the cluster posture for state that
-    outlives one stage)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "co_order_part")
-    hit = _GRAPH_EDGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from ..operators.graph import materialize
-
-    adj = materialize(co_order_part_adj_plan(spark, sf_dir))
-    _GRAPH_EDGE_CACHE[key] = adj
-    return adj
+    once per session+corpus from :func:`co_order_part_adj_plan` (see
+    :func:`_lineitem_edges`)."""
+    return _lineitem_edges(
+        spark, sf_dir, "co_order_part",
+        lambda: co_order_part_adj_plan(spark, sf_dir),
+    )
 
 
 def order_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -579,35 +502,21 @@ def order_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ml_assoc_rules). Unlike :func:`co_order_part_adj` this KEEPS the
     order key (pair support needs per-order counting, the adjacency's
     global distinct loses it). Same memo/materialize contract."""
-    key = (spark.sparkContext.applicationId, sf_dir, "order_part")
-    hit = _GRAPH_EDGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from ..operators.graph import materialize
-
-    edges = materialize(
-        t(spark, sf_dir, "lineitem")
+    return _lineitem_edges(
+        spark, sf_dir, "order_part",
+        lambda: t(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
-        .distinct()
+        .distinct(),
     )
-    _GRAPH_EDGE_CACHE[key] = edges
-    return edges
 
 
 def supplier_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct ``(l_suppkey, l_partkey)`` bipartite edges of the supply
     graph — graph_jaccard's posting lists. Same memo/materialize
     contract as :func:`co_order_part_adj`."""
-    key = (spark.sparkContext.applicationId, sf_dir, "supplier_part")
-    hit = _GRAPH_EDGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from ..operators.graph import materialize
-
-    edges = materialize(
-        t(spark, sf_dir, "lineitem")
+    return _lineitem_edges(
+        spark, sf_dir, "supplier_part",
+        lambda: t(spark, sf_dir, "lineitem")
         .select("l_suppkey", "l_partkey")
-        .distinct()
+        .distinct(),
     )
-    _GRAPH_EDGE_CACHE[key] = edges
-    return edges

@@ -12,12 +12,11 @@ run Spark jobs while their DataFrame is built (``eager="compute"``).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import catalog, memo
 from ..operators import multimodal
 from ..operators.dedup import (
     minhash_banded_pairs,
@@ -642,24 +641,14 @@ def llm_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters and recall@10 >= 0.9 needs most clusters scanned (measured
     0.9-1.0 at nprobe=12 across sf0.001/0.01/0.1). On clustered
     real-world embeddings a small nprobe recovers — see the synthetic
-    clustered recall test in tests/test_operators.py."""
-    import os
-
-    from ..operators.simsearch import corpus_cache_key
-
+    clustered recall test in tests/test_operators.py. The coarse
+    quantizer is trained once per corpus content, not once per probe
+    (see ivf_topk)."""
     raw = t(spark, sf_dir, "embeddings")
     emb = raw.filter(vec_dim_ok(raw) & vec_finite())
     return ivf_topk(
         emb, probe_vec_id=_min_vec_id(emb), k=10,
         n_centroids=16, nprobe=12,
-        # index-per-corpus: the coarse quantizer is a persisted artifact,
-        # trained once per fixture dir, not once per probe. The key folds
-        # in the file's mtime/size fingerprint so an in-place fixture
-        # regeneration retrains instead of serving stale centroids.
-        corpus_key=corpus_cache_key(
-            os.path.join(sf_dir, "embeddings.parquet"),
-            label=f"embeddings:{sf_dir}",
-        ),
     )
 
 
@@ -1490,8 +1479,7 @@ def llm_sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarser 8×16 codebook only reached 0.2 there, so the registry pins
     the measured configuration). Same persisted-index contract as IVF:
     codebooks are trained once per corpus fingerprint and cached."""
-    from ..operators.simsearch import corpus_cache_key, pq_topk
-
+    from ..operators.simsearch import pq_topk
 
     # ragged-dim + poisoned-vector exclusion (round-12 contract,
     # _util.vec_dim_ok; round-11 contract, _util.vec_finite — ADVICE r12:
@@ -1503,9 +1491,6 @@ def llm_sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_topk(
         emb, probe_vec_id=_min_vec_id(emb), k=10,
         m=16, ksub=64, refine=8,
-        corpus_key=corpus_cache_key(
-            os.path.join(sf_dir, "embeddings.parquet"), label="pq"
-        ),
     )
 
 
@@ -1971,29 +1956,26 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-level result cache for the shared merge engine (VERDICT r5 #6):
-# llm_bpe_train and llm_bpe_encode deliberately share _bpe_run so train
-# and apply can never drift — but without a cache each key re-runs the
-# full 3-iteration train. Caching the RESULT per (session, sf_dir, iters)
-# keeps the single-implementation guarantee (one engine, memoized) while
-# letting encode reuse train's materialized sequence: the returned
-# DataFrames sit on localCheckpoints, so after their first action the
-# lineage is truncated and replays are cheap. Keyed by applicationId so a
-# restarted session can never see another JVM's checkpointed RDDs.
-_BPE_CACHE: dict[tuple, tuple] = {}
-
-
 def _bpe_run(spark: SparkSession, sf_dir: str):
     """Shared BPE merge engine: BPE_ITERS exact iterations, returning
     (per-iteration stats rows, final encoded sequence DF). llm_bpe_train
     reports the former; llm_bpe_encode aggregates the latter — train and
     apply share one implementation, so the learned merges and the encoded
-    corpus can never drift apart. Memoized per session+corpus (see
-    _BPE_CACHE above)."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir, BPE_ITERS)
-    hit = _BPE_CACHE.get(cache_key)
-    if hit is not None:
-        return hit
+    corpus can never drift apart.
+
+    Memoized per session and documents content: without it each of the
+    two keys re-runs the full train, and encode reuses train's
+    sequence, whose localCheckpoints truncate lineage after the first
+    action so replays are cheap. The session's applicationId is in the
+    key so a restarted session never sees another JVM's checkpoints."""
+    key = (
+        "bpe", spark.sparkContext.applicationId,
+        memo.fingerprint(catalog.table_path(sf_dir, "documents")), BPE_ITERS,
+    )
+    return memo.cached(key, lambda: _bpe_train(spark, sf_dir))
+
+
+def _bpe_train(spark: SparkSession, sf_dir: str):
     docs = t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     seq = docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
@@ -2059,8 +2041,6 @@ def _bpe_run(spark: SparkSession, sf_dir: str):
         n_tokens -= int(n_merges)
         rows.append((it, a, b, int(c), int(n_merges), int(n_tokens)))
         seq = rebuilt
-
-    _BPE_CACHE[cache_key] = (rows, seq)
     return rows, seq
 
 

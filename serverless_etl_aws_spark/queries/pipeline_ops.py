@@ -17,7 +17,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import events_reader_setup
+from .. import memo
+from ..catalog import events_reader_setup, table_path
 from ..pipeline.ingest import IncrementalIngest
 from ..streaming.windows import split_parquet_by_mod
 from . import Query
@@ -359,30 +360,20 @@ def maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per process per FIXTURE CONTENT — the fragmented table is this
     # key's INPUT (the thing a fleet of stream writers produced), not
     # the compaction under measurement, and rebuilding it every run
-    # only re-times the fixture writer. The staging dir name carries
-    # (path, mtime_ns, size) of the source fixture, the same
-    # content-key discipline as _util._ROW_GROUP_CACHE, so a different
-    # sf_dir (or a regenerated fixture) in the same process stages its
-    # own copy; the _SUCCESS gate keeps a half-written staging from a
-    # killed run from being read as input.
-    src_path = os.path.join(sf_dir, "lineitem.parquet")
-    try:
-        st = os.stat(src_path)
-        # Stable digest, NOT builtin hash(): str hashing is salted per
-        # process (PYTHONHASHSEED), which made the "same content" key
-        # differ every run — each process staged a fresh 64-file copy
-        # and stale ones accumulated unboundedly (ADVICE r14).
-        import hashlib
-
-        ckey = hashlib.sha256(
-            repr(
-                (os.path.abspath(src_path), st.st_mtime_ns, st.st_size)
-            ).encode()
-        ).hexdigest()[:16]
-    except OSError:  # unstatable source: stage fresh, never share
+    # only re-times the fixture writer. The staging dir name is a
+    # stable digest (not the per-process salted builtin hash()) of the
+    # source's memo.fingerprint, so a different sf_dir (or a
+    # regenerated fixture) stages its own copy; the _SUCCESS gate keeps
+    # a half-written staging from a killed run from being read as input.
+    fp = memo.fingerprint(table_path(sf_dir, "lineitem"))
+    if fp is None:  # unstatable source: stage fresh, never share
         import uuid
 
         ckey = uuid.uuid4().hex
+    else:
+        import hashlib
+
+        ckey = hashlib.sha256(repr(fp).encode()).hexdigest()[:16]
     frag_dir = os.path.join(base, f"fragmented_{ckey}")
     if not os.path.exists(os.path.join(frag_dir, "_SUCCESS")):
         # Prune staging copies whose key no longer matches the current

@@ -97,11 +97,9 @@ def test_bpe_parallel_merge_equals_sequential_on_runs(docs, bpe_spark):
 
     orig_t = util.t
     try:
-        # point the key at the synthetic corpus; the session-level merge
-        # cache keys on (session, sf_dir) — swapping the corpus behind a
-        # fixed sf_dir requires dropping it (production code never does
-        # this; the monkeypatch does, once per hypothesis example)
-        llm_mod._BPE_CACHE.clear()
+        # point the key at the synthetic corpus; "ignored" has no
+        # documents file to fingerprint, so the session memo is bypassed
+        # and every hypothesis example trains on its own corpus
         llm_mod.t = lambda s, sf, name: df
         got = [
             (r.pair_a, r.pair_b, r.pair_count, r.merges, r.tokens_after)
@@ -124,7 +122,6 @@ def test_bpe_pair_exhaustion_matches_oracle(spark):
     df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
     orig = llm_mod.t
     try:
-        llm_mod._BPE_CACHE.clear()  # corpus swapped behind a fixed sf_dir
         llm_mod.t = lambda s, sf, name: df
         got = [
             (r.it, r.pair_a, r.pair_b, r.pair_count, r.merges,

@@ -1448,7 +1448,7 @@ def test_dirty_timezone_would_change_results(spark, dst_sf_dir):
 # column-order pinning, DuckDB's by-name multi-file bind, pyarrow
 # dataset reads in the staging helpers (stage_events_dir,
 # split_parquet_by_mod, scan_merge_schema's orders staging, the
-# corpus_cache_key walk), and row-group-granular operators
+# memo.fingerprint walk), and row-group-granular operators
 # (maintenance_zorder) over 100-row groups.
 
 #: Per-table column whose THIRD chunk is written entirely NULL (one

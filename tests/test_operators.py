@@ -547,20 +547,22 @@ def test_merge_schema_missing_column_nulls_not_errors(spark, sf_dir):
     assert df.count() == base.count()
 
 
+def _memo_entries(kind):
+    from serverless_etl_aws_spark import memo
+
+    return {k: v for k, v in memo._STORE.items() if k[0] == kind}
+
+
 def test_ivf_cache_invalidates_on_corpus_regeneration(spark, tmp_path):
     """Regenerating a corpus in place (same path, new content) must
-    retrain the coarse quantizer: the cache key folds in the file
+    retrain the coarse quantizer: the memo key folds in the corpus
     fingerprint, so the stale centroids can't be served."""
     import numpy as np
 
-    from serverless_etl_aws_spark.operators import simsearch
-    from serverless_etl_aws_spark.operators.simsearch import (
-        corpus_cache_key,
-        ivf_topk,
-    )
+    from serverless_etl_aws_spark import memo
+    from serverless_etl_aws_spark.operators.simsearch import ivf_topk
 
     path = str(tmp_path / "emb.parquet")
-    rng = np.random.default_rng(7)
 
     def write_corpus(seed):
         r = np.random.default_rng(seed)
@@ -572,22 +574,23 @@ def test_ivf_cache_invalidates_on_corpus_regeneration(spark, tmp_path):
         ).coalesce(1).write.mode("overwrite").parquet(path)
 
     write_corpus(1)
-    key1 = corpus_cache_key(path, label="t")
-    emb = spark.read.parquet(path)
-    simsearch.clear_centroid_cache()
-    ivf_topk(emb, 0, 5, 4, 2, corpus_key=key1).collect()
-    assert len(simsearch._CENTROID_CACHE) == 1
+    memo.clear()
+    try:
+        ivf_topk(spark.read.parquet(path), 0, 5, 4, 2).collect()
+        assert len(_memo_entries("ivf")) == 1
+        # same corpus again: served from the memo, no second entry
+        ivf_topk(spark.read.parquet(path), 0, 5, 4, 2).collect()
+        assert len(_memo_entries("ivf")) == 1
 
-    write_corpus(2)  # in-place regeneration: same path, new content
-    key2 = corpus_cache_key(path, label="t")
-    assert key2 != key1  # fingerprint moved with the rewrite
-    emb2 = spark.read.parquet(path)
-    ivf_topk(emb2, 0, 5, 4, 2, corpus_key=key2).collect()
-    # a second, RETRAINED entry — the stale one was not reused
-    assert len(simsearch._CENTROID_CACHE) == 2
-    (c1, c2) = (v for v in simsearch._CENTROID_CACHE.values())
-    assert not np.allclose(c1, c2)
-    simsearch.clear_centroid_cache()
+        write_corpus(2)  # in-place regeneration: same path, new content
+        ivf_topk(spark.read.parquet(path), 0, 5, 4, 2).collect()
+        # a second, RETRAINED entry — the stale one was not reused
+        entries = _memo_entries("ivf")
+        assert len(entries) == 2
+        (c1, c2) = entries.values()
+        assert not np.allclose(c1, c2)
+    finally:
+        memo.clear()
 
 
 def test_hadoop_dir_bytes_scheme_agnostic(spark, tmp_path):
@@ -1063,50 +1066,56 @@ def test_vec_dim_mode_memoized_per_corpus_content(spark, sf_dir, tmp_path):
     (a) same on-disk corpus, same plan → one scan, cached result served
     to later calls; (b) a DIFFERENT plan over the same files (filtered
     lineage) gets its OWN entry — so a filtered first caller can never
-    poison the raw table's cached mode (ADVICE r13); (c) the cache is
+    poison the raw table's cached mode (ADVICE r13); (c) the memo is
     content-bound — rewriting the corpus in place invalidates it;
     (d) an in-memory DataFrame (no file lineage) stays uncached and
     still computes correctly."""
-    from serverless_etl_aws_spark.catalog import load_table
-    from serverless_etl_aws_spark.queries import _util
-    from serverless_etl_aws_spark.queries._util import (
-        clear_dim_mode_cache, vec_dim_mode,
-    )
+    import os
 
-    clear_dim_mode_cache()
+    from serverless_etl_aws_spark import memo
+    from serverless_etl_aws_spark.catalog import load_table
+    from serverless_etl_aws_spark.queries._util import vec_dim_mode
+
+    memo.clear()
     try:
         raw = load_table(spark, sf_dir, "embeddings")
         d1 = vec_dim_mode(raw)
         assert d1 is not None and d1 > 0
-        assert len(_util._DIM_MODE_CACHE) == 1
-        cached = dict(_util._DIM_MODE_CACHE)
-        # same relation again: cache hit, no new entry
+        cached = _memo_entries("dim_mode")
+        assert len(cached) == 1
+        # same relation again: memo hit, no new entry
         assert vec_dim_mode(load_table(spark, sf_dir, "embeddings")) == d1
-        assert _util._DIM_MODE_CACHE == cached
+        assert _memo_entries("dim_mode") == cached
         # filtered lineage over the SAME files: its own entry (the
         # filtered mode happens to equal the raw mode here, but the key
         # must differ — first-call-wins poisoning is the bug class)
         d2 = vec_dim_mode(raw.filter("vec_id >= 0"))
-        assert d2 == d1 and len(_util._DIM_MODE_CACHE) == 2
-        assert set(cached).issubset(_util._DIM_MODE_CACHE)
+        assert d2 == d1 and len(_memo_entries("dim_mode")) == 2
+        assert set(cached).issubset(_memo_entries("dim_mode"))
 
-        # content-bound: a DIFFERENT corpus file gets its own entry
-        import pyspark.sql.functions as F
+        # content-bound: rewriting a corpus in place recomputes the mode
         small = spark.createDataFrame(
             [(1, [1.0, 2.0]), (2, [3.0, 4.0]), (3, [5.0, 6.0, 7.0])],
             "vec_id long, embedding array<double>",
         )
         out = str(tmp_path / "emb2.parquet")
         small.coalesce(1).write.mode("overwrite").parquet(out)
-        re = spark.read.parquet(out)
-        assert vec_dim_mode(re) == 2
-        assert len(_util._DIM_MODE_CACHE) == 3
+        assert vec_dim_mode(spark.read.parquet(out)) == 2
+        assert len(_memo_entries("dim_mode")) == 3
+        wide = spark.createDataFrame(
+            [(1, [1.0, 2.0, 3.0]), (2, [4.0, 5.0, 6.0]), (3, [7.0, 8.0])],
+            "vec_id long, embedding array<double>",
+        )
+        wide.coalesce(1).write.mode("overwrite").parquet(out)
+        os.utime(out, (1, 1))  # the directory's own mtime is not the key
+        assert vec_dim_mode(spark.read.parquet(out)) == 3
+        assert len(_memo_entries("dim_mode")) == 4
 
         # no file lineage: uncached but correct
         assert vec_dim_mode(small) == 2
-        assert len(_util._DIM_MODE_CACHE) == 3
+        assert len(_memo_entries("dim_mode")) == 4
     finally:
-        clear_dim_mode_cache()
+        memo.clear()
 
 
 def test_kcore_peel_early_exit_matches_full_unroll(spark):

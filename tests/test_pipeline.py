@@ -249,6 +249,39 @@ class TestActionDispatcher:
         assert resp["statusCode"] == 400
 
 
+def test_seen_files_survive_log_compaction(spark, tmp_path):
+    """Twelve one-file batches push the file-source log past Spark's
+    10-batch compaction, whose .compact file repeats every earlier
+    entry: the ingest count and get_unprocessed must both read the log
+    as a set of files. One file name needs URL-decoding to match the
+    bronze listing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from serverless_etl_aws_spark.pipeline.actions import ActionDispatcher
+    from serverless_etl_aws_spark.pipeline.ingest import IncrementalIngest
+
+    bronze = tmp_path / "bronze"
+    bronze.mkdir()
+    names = [f"f{i:02d}.parquet" for i in range(11)] + ["f 11.parquet"]
+    for i, name in enumerate(names):
+        pq.write_table(pa.table({"v": [i]}), str(bronze / name))
+    ckpt = str(tmp_path / "ckpt")
+    result = IncrementalIngest(
+        spark,
+        bronze_dir=str(bronze),
+        silver_dir=str(tmp_path / "silver"),
+        checkpoint_dir=ckpt,
+        schema=spark.createDataFrame([], "v long").schema,
+        max_files_per_trigger=1,
+    ).run_once()
+    logs = os.listdir(os.path.join(ckpt, "sources", "0"))
+    assert any(log.endswith(".compact") for log in logs)
+    assert result.batches == result.files_processed == len(names)
+    d = ActionDispatcher(str(bronze), ckpt, str(tmp_path / "archive"))
+    assert d.get_unprocessed() == []
+
+
 def test_rollup_refresh_guards_partition_cardinality(spark, tmp_path):
     """A high-cardinality 'partition' column must fail loudly instead of
     collecting unbounded distinct values onto the driver."""

@@ -20,16 +20,13 @@ import os
 
 from pyspark.sql.streaming import StreamingQueryListener
 
-from serverless_etl_aws_spark import catalog
-from serverless_etl_aws_spark.operators import simsearch
+from serverless_etl_aws_spark import memo
 from serverless_etl_aws_spark.queries import (
     COMPUTE_EAGER_KEYS,
     CONTRACT_2B,
     EAGER_KEYS,
     EXTENSION_KEYS,
-    _util,
     build_registry,
-    llm,
 )
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -114,15 +111,6 @@ class _StartCounter(StreamingQueryListener):
         pass
 
 
-def _clear_session_memos() -> None:
-    """Drop every per-session memo so a build pays its cold-path jobs."""
-    for memo in (
-        _util._DIM_MODE_CACHE, _util._GRAPH_EDGE_CACHE, llm._BPE_CACHE,
-        simsearch._CENTROID_CACHE, simsearch._PQ_CACHE, catalog._TABLE_CACHE,
-    ):
-        memo.clear()
-
-
 def _build_counts(spark, keys):
     """Build each key cold; return {key: (spark jobs, streams started)}."""
     reg = build_registry()
@@ -133,7 +121,7 @@ def _build_counts(spark, keys):
     counts = {}
     try:
         for key in keys:
-            _clear_session_memos()
+            memo.clear()  # every build pays its cold-path jobs
             group = f"build-probe:{key}"
             listener.building = key
             sc.setJobGroup(group, group)
