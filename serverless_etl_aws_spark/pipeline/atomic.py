@@ -409,27 +409,36 @@ class AtomicPartitionedTable:
         return max(ids) + 1
 
     def _reserve_snapshot(self) -> int:
-        """Claim a snapshot number exclusively by atomically creating a
-        hidden marker file (``create`` with overwrite=False — atomic on
-        HDFS; Spark's file sources skip dot-files, so the marker is
-        invisible to readers). ``errorifexists`` on the data write alone
+        """Claim a snapshot number exclusively by creating a hidden
+        marker file through the publish primitive
+        (:meth:`_write_file_atomic`: PUT-if-absent under true
+        concurrency; Hadoop's local ``create(overwrite=False)`` is
+        check-then-act, so two racers could both claim one number).
+        Spark's file sources skip dot-files, so the marker is invisible
+        to readers. ``errorifexists`` on the data write alone
         is check-then-act: two racing writers could both pass the
         existence check and interleave task files INSIDE one snapshot
         dir, which would corrupt the snapshot without any error — the
-        reservation closes that window."""
+        reservation closes that window. A marker only claims its number
+        until its owner's ``snap=N`` dir exists (the commit then deletes
+        it), so a claim made from a stale scan also checks for that
+        dir."""
         fs = self._fs()
         last_exc: Exception | None = None
         for _attempt in range(self.MAX_PUBLISH_RETRIES * 4):
             snap = self._next_snapshot()
-            marker = self._jpath(
-                self.DATA_DIR, f"{self.RESERVE_PREFIX}{snap}"
-            )
+            marker = f"{self.RESERVE_PREFIX}{snap}"
             try:
-                stream = fs.create(marker, False)
-                stream.close()
-                return snap
+                self._write_file_atomic(self.DATA_DIR, marker, "")
             except Exception as exc:  # rival claimed it — rescan
                 last_exc = exc
+                continue
+            if not fs.exists(self._jpath(self.DATA_DIR, f"snap={snap}")):
+                return snap
+            # A rival reserved this number after our scan, wrote its snap
+            # dir and released its marker before our create: the dir now
+            # guards the id, so drop our marker and rescan.
+            fs.delete(self._jpath(self.DATA_DIR, marker), False)
         raise CommitConflict(
             f"atomic commit on {self.root} could not reserve a snapshot "
             f"number (last error: {last_exc})"

@@ -425,6 +425,30 @@ def test_true_concurrent_writers_converge(spark, tmp_path):
     assert snapshot(table) == {("d1", "a"): 5, ("d2", "a"): 5}
 
 
+def test_reservation_rejects_number_a_rival_wrote_and_released(
+    spark, tmp_path, monkeypatch
+):
+    """The interleaving behind the concurrent-writer flake
+    (PATH_ALREADY_EXISTS on ``snap=N``): writer B scans, writer A then
+    reserves N, writes ``snap=N`` and deletes its marker, and only then
+    does B create the marker for its stale N — which succeeds because
+    the marker is gone. Replayed deterministically with a stale scan:
+    the reservation must notice the data dir and take the next number."""
+    table = AtomicPartitionedTable(spark, str(tmp_path / "tbl"), "day")
+    table.commit_overwrite_partitions(df_of(spark, [("d1", "a", 1)]))
+    real_next = table._next_snapshot
+    stale = iter([1])  # snap=1 exists; its marker is already released
+    monkeypatch.setattr(
+        table, "_next_snapshot", lambda: next(stale, None) or real_next()
+    )
+    table.commit_overwrite_partitions(df_of(spark, [("d2", "b", 2)]))
+    assert table.current_version() == 2
+    assert snapshot(table) == {("d1", "a"): 1, ("d2", "b"): 2}
+    markers = [n for n in table._list_names(table.DATA_DIR)
+               if n.startswith(table.RESERVE_PREFIX)]
+    assert markers == []  # the losing marker was dropped, not leaked
+
+
 @pytest.mark.parametrize("seed", [7, 23, 91])
 def test_random_walk_matches_dict_model(spark, tmp_path, seed):
     """Model-based soak: a seeded random walk of commits, crashed
